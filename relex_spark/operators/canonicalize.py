@@ -149,7 +149,22 @@ def connected_components(
     chains cost the same as alias stars. Each round is a groupBy + join
     keyed by node id; AQE handles skewed hub nodes. At the fixpoint the
     edge set is exactly {(node, component-min)} for every non-root node.
+
+    Both paths return STRING columns and order labels as strings, so any
+    other ``src``/``dst`` type is rejected up front (TypeError naming the
+    cast) rather than labelled differently by the two paths.
     """
+    wrong = {
+        f.name: f.dataType.simpleString()
+        for f in edges.schema.fields
+        if f.name in ("src", "dst") and f.dataType.simpleString() != "string"
+    }
+    if wrong:
+        raise TypeError(
+            f"connected_components needs STRING src/dst, got {wrong}; cast "
+            "them first: edges.select(F.col('src').cast('string'), "
+            "F.col('dst').cast('string'))"
+        )
     if local_threshold > 0:
         probe = edges.select("src", "dst").limit(local_threshold + 1).collect()
         if len(probe) <= local_threshold:

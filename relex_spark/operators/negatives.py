@@ -62,6 +62,11 @@ def negative_sample_triples(
     partitioning-independent; duplicates of (subj, pred, obj_neg) at
     different neg_idx are possible (hash collisions across i) and kept —
     downstream samplers weigh them as the hash distribution produced them.
+
+    A triple with a NULL ``subj``, ``pred`` or ``obj`` yields no negatives:
+    its pick hash is NULL (``_h60`` propagates NULL, as the DuckDB oracle's
+    ``||`` does), so it matches no entity id. As a true triple it filters
+    nothing: NULL keys match nothing in the anti-join.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")

@@ -7,6 +7,13 @@ shape the reference's AllenNLP batches take
 per-micro-batch only, never global (reference analogue: bucket-iterator
 padding, B1).
 
+The CNN encoder never builds the embedded input. Its first layer is linear
+in ``x = [NS[ns] | E[tok] | H[h] | T[t]]``, so each lookup table is
+projected through its row block of the packed filter matrix and the
+convolution is a sum of gathers from the projected tables (``cnn_encode``).
+The other encoders take the embedded ``(B, L, d_in)`` tensor from
+``embed_batch``; both read their row indices from ``_input_indices``.
+
 Compute dtype follows the weight arrays (``ModelWeights.astype``):
 float64 for the golden-pinned fixture path (accumulation drift ~1e-16 —
 micro-unit quantization can never flip with chunk shape or BLAS thread
@@ -25,16 +32,19 @@ discussion of parity scope. Label-level parity is the P/R gate.)
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 from relex_spark.scoring.weights import ModelWeights
 
 # ---------------------------------------------------------------------------
 # Buffer pool: Spark reuses Python workers across tasks, so scratch tensors
-# are process-lifetime reusable. Allocating the projected-conv tensor fresh
-# per batch (hundreds of MB) turns into mmap/munmap churn — page zeroing +
-# TLB shootdowns serialize ALL workers on the kernel (measured: 8→32 procs
-# made total throughput DROP without this). Grow-only, keyed by use-site.
+# are process-lifetime reusable. Allocating a large one (here the non-CNN
+# encoders' embedded input) fresh per batch turns into mmap/munmap churn —
+# page zeroing + TLB shootdowns serialize ALL workers on the kernel
+# (measured on the former dense CNN's projected tensor: 8→32 procs made
+# total throughput DROP without this). Grow-only, keyed by use-site.
 # ---------------------------------------------------------------------------
 
 _BUF_POOL: dict[str, np.ndarray] = {}
@@ -76,74 +86,107 @@ def relative_offset_index_batch(
     return np.where(mask, idx, 0)
 
 
+# M6 entity_only offsets as a lookup table: row 0 off the span start, row 1
+# at it (the 0/1 start marker of entity_only_offset_embedder.py:33-38).
+_START_MARKER = np.array([[0.0], [1.0]])
+
+
+def _input_tables(w: ModelWeights) -> list[np.ndarray]:
+    """The lookup tables whose rows, concatenated per position, form the
+    encoder input ``x = [NS[ns] | E[tok] | H[h] | T[t]]``, in column order.
+
+    Multi-namespace (M1) tables come first in sorted namespace order —
+    AllenNLP BasicTextFieldEmbedder concatenates text field keys in sorted
+    order and ner_tokens < pos_tokens < tokens (basic_relation_classifier.py:186,
+    tacred configs token_indexers) — then the token table (M7), then the
+    head and tail offset tables (M4–M6)."""
+    ns_emb = w.extra.get("ns_emb") or {}
+    tables = [ns_emb[name] for name in sorted(ns_emb)] + [w.emb]
+    if w.offset_type == "entity_only":
+        marker = _START_MARKER.astype(w.emb.dtype)
+        return tables + [marker, marker]
+    return tables + [w.head_offset_emb, w.tail_offset_emb]
+
+
+def _input_indices(w: ModelWeights, ids: np.ndarray, lengths: np.ndarray,
+                   head_spans: np.ndarray, tail_spans: np.ndarray,
+                   ns_ids: dict[str, np.ndarray] | None) -> list[np.ndarray]:
+    """(B, L) row indices into each of ``_input_tables(w)``, same order.
+    Offset indices are 0 on padding; pad positions never fall inside a
+    valid CNN window, so no caller depends on what a pad row holds."""
+    ns_emb = w.extra.get("ns_emb") or {}
+    idx = []
+    if ns_emb:
+        if ns_ids is None:
+            raise ValueError("weights carry ns_emb but no ns_ids supplied")
+        idx = [ns_ids[name] for name in sorted(ns_emb)]
+    idx.append(ids)
+    lmax = ids.shape[1]
+    pos = np.arange(lmax)[None, :]
+    mask = pos < lengths[:, None]
+    if w.offset_type == "relative":
+        for spans in (head_spans, tail_spans):
+            idx.append(relative_offset_index_batch(
+                lengths, spans[:, 0], spans[:, 1], w.n_position, lmax
+            ))
+    elif w.offset_type == "sine":
+        # M5 (sine_offset_embedder.py:49-60): index anchored at span start
+        for spans in (head_spans, tail_spans):
+            idx.append(np.where(mask, 1 + w.n_position + pos - spans[:, :1], 0))
+    elif w.offset_type == "entity_only":
+        # M6: row 1 of the start-marker table at the span start
+        for spans in (head_spans, tail_spans):
+            idx.append(((pos == spans[:, :1]) & mask).astype(np.intp))
+    else:
+        raise ValueError(f"unknown offset_type {w.offset_type!r}")
+    return idx
+
+
 def embed_batch(w: ModelWeights, ids: np.ndarray, lengths: np.ndarray,
                 head_spans: np.ndarray, tail_spans: np.ndarray,
                 ns_ids: dict[str, np.ndarray] | None = None) -> np.ndarray:
     """M1 + M4×2 + M7: namespace + token embedding lookups, head/tail
-    offset embedding lookup, concatenation → (B, L, d_in) float32, zero at
-    padding.
-
-    Multi-namespace (M1): when the weights carry ``extra["ns_emb"]``
-    (e.g. ner/pos), each namespace's (B, L) id matrix in ``ns_ids`` is
-    embedded and concatenated BEFORE the token embedding, in sorted
-    namespace order — AllenNLP BasicTextFieldEmbedder concatenates text
-    field keys in sorted order and ner_tokens < pos_tokens < tokens
-    (basic_relation_classifier.py:186, tacred configs token_indexers)."""
+    offset embedding lookup, concatenation → (B, L, d_in), zero at
+    padding. Table order: ``_input_tables``."""
     b, lmax = ids.shape
-    pos = np.arange(lmax)[None, :]
-    mask = pos < lengths[:, None]
-    d_emb = w.emb.shape[1]
-    d_total = w.d_in
+    mask = np.arange(lmax)[None, :] < lengths[:, None]
 
-    # Pooled output: written slice-wise (no per-namespace temporaries beyond
-    # the fancy-index results, no final concatenate copy). Valid until the
-    # next embed_batch call in this worker — callers consume it within the
-    # same forward chunk.
-    out = _pooled("embed_x", (b, lmax, d_total), w.emb.dtype)
+    # Pooled output: written slice-wise (no per-table temporaries beyond the
+    # fancy-index results, no final concatenate copy). Valid until the next
+    # embed_batch call in this worker — callers consume it within the same
+    # forward chunk.
+    out = _pooled("embed_x", (b, lmax, w.d_in), w.emb.dtype)
     c0 = 0
-    ns_emb = w.extra.get("ns_emb") or {}
-    if ns_emb:
-        if ns_ids is None:
-            raise ValueError("weights carry ns_emb but no ns_ids supplied")
-        for name in sorted(ns_emb):
-            m = ns_emb[name]
-            out[:, :, c0 : c0 + m.shape[1]] = m[ns_ids[name]]
-            c0 += m.shape[1]
-    out[:, :, c0 : c0 + d_emb] = w.emb[ids]             # (B, L, d_emb)
-    c0 += d_emb
-
-    if w.offset_type == "relative":
-        hidx = relative_offset_index_batch(
-            lengths, head_spans[:, 0], head_spans[:, 1], w.n_position, lmax
-        )
-        tidx = relative_offset_index_batch(
-            lengths, tail_spans[:, 0], tail_spans[:, 1], w.n_position, lmax
-        )
-        d_h = w.head_offset_emb.shape[1]
-        out[:, :, c0 : c0 + d_h] = w.head_offset_emb[hidx]
-        out[:, :, c0 + d_h :] = w.tail_offset_emb[tidx]
-    elif w.offset_type == "sine":
-        # M5 (sine_offset_embedder.py:49-60): index anchored at span start
-        hidx = np.where(mask, 1 + w.n_position + pos - head_spans[:, :1], 0)
-        tidx = np.where(mask, 1 + w.n_position + pos - tail_spans[:, :1], 0)
-        d_h = w.head_offset_emb.shape[1]
-        out[:, :, c0 : c0 + d_h] = w.head_offset_emb[hidx]
-        out[:, :, c0 + d_h :] = w.tail_offset_emb[tidx]
-    elif w.offset_type == "entity_only":
-        # M6 (entity_only_offset_embedder.py:33-38): 1.0 at span start
-        out[:, :, c0] = pos == head_spans[:, :1]
-        out[:, :, c0 + 1] = pos == tail_spans[:, :1]
-    else:
-        raise ValueError(f"unknown offset_type {w.offset_type!r}")
-
+    for table, idx in zip(
+        _input_tables(w), _input_indices(w, ids, lengths, head_spans, tail_spans, ns_ids)
+    ):
+        out[:, :, c0 : c0 + table.shape[1]] = table[idx]
+        c0 += table.shape[1]
     out *= mask[:, :, None]
     return out
 
 
-def _cnn_packed(w: ModelWeights):
-    """Pack all filter widths into one (d_in, Σ k·nf) matrix so the conv is a
-    single GEMM reading x once (columns ordered by width k asc, then offset o
-    within the window). Cached per weights object (one pack per worker)."""
+class _CnnPack(NamedTuple):
+    """The CNN filters, packed and projected once per weights object.
+
+    Packed filter matrix: all widths side by side, ``(d_in, Σ k·nf)``,
+    columns ordered by width k ascending, then window offset o, so the
+    block for (k, o) starts at column ``offs[k] + o·nf``."""
+
+    projected: list[np.ndarray | None]  # per input table: table @ its row block; None for tokens
+    tok: int                            # position of the token table
+    w_tok: np.ndarray                   # token row block of the packed matrix (d_emb, Σ k·nf)
+    ks: list[int]
+    nfs: dict[int, int]
+    bks: dict[int, np.ndarray]
+    offs: dict[int, int]
+
+
+def _cnn_packed(w: ModelWeights) -> _CnnPack:
+    """Pack all filter widths into one matrix and project every input table
+    except the token table (the namespace and offset tables are small and
+    fixed) through its row block. Cached per weights object (one pack per
+    worker)."""
     packed = getattr(w, "_cnn_packed_cache", None)
     if packed is not None:
         return packed
@@ -161,8 +204,19 @@ def _cnn_packed(w: ModelWeights):
         c0 += k * nf
     # dtype passthrough: the pack computes in whatever precision the
     # weights carry (float64 fixture / float32 production)
-    w_all = np.ascontiguousarray(np.concatenate(blocks, axis=1))
-    packed = (w_all, ks, nfs, bks, offs)
+    w_all = np.concatenate(blocks, axis=1)
+    tables = _input_tables(w)
+    tok = len(tables) - 3  # the token table precedes the two offset tables
+    projected, w_tok, r0 = [], None, 0
+    for i, table in enumerate(tables):
+        rows = w_all[r0 : r0 + table.shape[1]]
+        r0 += table.shape[1]
+        if i == tok:
+            w_tok = np.ascontiguousarray(rows)
+            projected.append(None)
+        else:
+            projected.append(table @ rows)
+    packed = _CnnPack(projected, tok, w_tok, ks, nfs, bks, offs)
     try:
         w._cnn_packed_cache = packed
     except Exception:  # frozen/slotted weights object: recompute per call
@@ -170,57 +224,57 @@ def _cnn_packed(w: ModelWeights):
     return packed
 
 
-# Cap on elements of the projected tensor per GEMM — bounds scratch memory
-# (32 MiB float32) and keeps the shifted-accumulation passes cache-friendly.
-_CNN_CHUNK_ELEMS = 8_388_608
+def cnn_encode(w: ModelWeights, ids: np.ndarray, lengths: np.ndarray,
+               head_spans: np.ndarray, tail_spans: np.ndarray,
+               ns_ids: dict[str, np.ndarray] | None = None) -> np.ndarray:
+    """M8: multi-width 1-D conv + ReLU + max-over-valid-windows → (B, d_enc),
+    scored from projected lookup tables.
 
+    The first layer is linear in ``x``, so ``x[t] @ W_k[o]`` is the sum over
+    input tables of ``(table @ W_k[o] rows)[idx[t]]``. The namespace and
+    offset tables are projected once per weights object (``_cnn_packed``);
+    the token table is projected per call over the chunk's distinct ids
+    only. conv_k[t] = Σ_o Σ_table P[idx[t+o], block(k, o)] is then summed
+    straight into a per-width accumulator of valid windows — neither the
+    embedded input nor the projected ``(B·L, Σ k·nf)`` tensor is built.
 
-def cnn_encode(w: ModelWeights, x: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """M8: multi-width 1-D conv + ReLU + max-over-valid-windows → (B, d_enc).
-
-    Formulation: conv_k[t] = Σ_o x[t+o]·W_k[o], so one packed GEMM
-    y = x @ [W_k[o]]_{k,o} (reads x once, no im2col materialization) followed
-    by shifted in-place accumulation per width. ~8× less memory traffic than
-    im2col — the scoring stage is bandwidth-bound at full parallelism (see
-    docs/SCALE.md roofline). Rows shorter than a width contribute that
-    width's ReLU(b) (a single zero-input window — deterministic,
-    batch-independent).
+    The bias and ReLU come after the max over time: both are monotone, so
+    ReLU(max_t conv + b) == max_t ReLU(conv + b) exactly. Rows shorter than
+    a width contribute that width's ReLU(b) (a single zero-input window —
+    deterministic, batch-independent).
     """
-    b, lmax, d_in = x.shape
-    w_all, ks, nfs, bks, offs = _cnn_packed(w)
-    dt = x.dtype
-    c_total = w_all.shape[1]
-    pooled_all = {k: np.empty((b, nfs[k]), dtype=dt) for k in ks}
-    rows = max(1, _CNN_CHUNK_ELEMS // max(lmax * c_total, 1))
-    for r0 in range(0, b, rows):
-        r1 = min(b, r0 + rows)
-        bc = r1 - r0
-        y = _pooled("cnn_y", (bc * lmax, c_total), dt)
-        np.matmul(x[r0:r1].reshape(bc * lmax, d_in), w_all, out=y)
-        y3 = y.reshape(bc, lmax, c_total)
-        lens_c = lengths[r0:r1]
-        for k in ks:
-            nf, bk, c0 = nfs[k], bks[k], offs[k]
-            n_win = lens_c - k + 1
-            if lmax >= k:
-                n_w = lmax - k + 1
-                acc = _pooled(f"cnn_acc_{k}", (bc, n_w, nf), dt)
-                np.copyto(acc, y3[:, :n_w, c0 : c0 + nf])
-                for o in range(1, k):
-                    acc += y3[:, o : n_w + o, c0 + o * nf : c0 + (o + 1) * nf]
-                acc += bk
-                np.maximum(acc, 0.0, out=acc)
-                wmask = np.arange(n_w)[None, :] < n_win[:, None]
-                np.copyto(acc, -np.inf, where=~wmask[:, :, None])
-                pooled = acc.max(axis=1)
-            else:
-                pooled = np.full((bc, nf), -np.inf, dtype=dt)
-            # Short rows (no valid window): ReLU(bias) from one zero window.
-            short = n_win < 1
-            if short.any():
-                pooled[short] = np.maximum(bk, 0.0)
-            pooled_all[k][r0:r1] = pooled
-    return np.concatenate([pooled_all[k] for k in ks], axis=1)
+    b, lmax = ids.shape
+    pack = _cnn_packed(w)
+    idx = _input_indices(w, ids, lengths, head_spans, tail_spans, ns_ids)
+    uniq, inv = np.unique(idx[pack.tok], return_inverse=True)
+    idx[pack.tok] = inv.reshape(b, lmax)
+    projected = list(pack.projected)
+    projected[pack.tok] = w.emb[uniq] @ pack.w_tok
+    segments = list(zip(projected, idx))
+    pooled_all = []
+    for k in pack.ks:
+        nf, c0 = pack.nfs[k], pack.offs[k]
+        n_w = lmax - k + 1
+        n_win = lengths - k + 1
+        if n_w < 1:
+            pooled = np.zeros((b, nf), dtype=pack.w_tok.dtype)
+        else:
+            parts = (                                            # (B, n_w, nf) each
+                table[ti[:, o : o + n_w], c0 + o * nf : c0 + (o + 1) * nf]
+                for o in range(k)
+                for table, ti in segments
+            )
+            acc = next(parts)
+            for part in parts:
+                acc += part
+            wmask = np.arange(n_w)[None, :] < n_win[:, None]
+            np.copyto(acc, -np.inf, where=~wmask[:, :, None])
+            pooled = acc.max(axis=1)
+            # Short rows (no valid window): one zero-input window.
+            pooled[n_win < 1] = 0.0
+        pooled += pack.bks[k]
+        pooled_all.append(np.maximum(pooled, 0.0, out=pooled))
+    return np.concatenate(pooled_all, axis=1)
 
 
 def boe_encode(x: np.ndarray, lengths: np.ndarray, pooling: str = "sum") -> np.ndarray:
@@ -318,18 +372,22 @@ def _densify_adjacency(adjacency: list, b: int, lmax: int) -> np.ndarray:
 
 def _encode_chunk(
     w: ModelWeights,
-    x: np.ndarray,
+    ids: np.ndarray,
     lengths: np.ndarray,
     head_spans: np.ndarray,
     tail_spans: np.ndarray,
     encoder: str,
     adjacency: list | None,
+    ns_ids: dict[str, np.ndarray] | None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Encoder dispatch for one padded chunk → (enc, ff_w, ff_b)."""
+    """Encoder dispatch for one padded chunk → (enc, ff_w, ff_b). The CNN
+    scores from the id matrices directly; every other encoder takes the
+    embedded input."""
     ff_w, ff_b = w.ff_w, w.ff_b
     if encoder == "cnn":
-        enc = cnn_encode(w, x, lengths)
-    elif encoder == "boe_sum":
+        return cnn_encode(w, ids, lengths, head_spans, tail_spans, ns_ids), ff_w, ff_b
+    x = embed_batch(w, ids, lengths, head_spans, tail_spans, ns_ids=ns_ids)
+    if encoder == "boe_sum":
         enc = boe_encode(x, lengths, "sum")
         ff_w = w.extra.get("boe_ff_w", ff_w)
         ff_b = w.extra.get("boe_ff_b", ff_b)
@@ -381,17 +439,19 @@ def forward_batch(
     basic_relation_classifier.py:221 ``output_dict["input_rep"]``].
 
     Mirrors basic_relation_classifier.py:153-229 at inference: embed →
-    offset embeds → concat → encoder → feedforward → softmax/argmax.
+    offset embeds → concat → encoder → feedforward → softmax/argmax (the
+    CNN folds the embedding lookups into its first layer, ``cnn_encode``).
     ``adjacency`` (per-row (src, dst) edge lists) is required for the
     GCN/GAT encoders; densified per chunk (G5), never materialized globally.
 
     Processes rows in FORWARD_CHUNK_ROWS chunks, each padded to its own max
     length — per-row outputs are chunk-independent (valid-window/masked
     semantics). Chunk shape still perturbs the last-ulp GEMM accumulation
-    order, so exact-bit chunk invariance holds only to the weights' dtype
-    precision: ~1e-16 for float64 fixture weights (micro-unit-quantized
-    outputs provably stable — test_micro_unit_scores_invariant_to_chunking),
-    ~1e-7 for float32 production weights (tolerance-level equivalence).
+    order (for the CNN, the per-chunk token-table projection), so exact-bit
+    chunk invariance holds only to the weights' dtype precision: ~1e-16
+    for float64 fixture weights (micro-unit-quantized outputs provably
+    stable — test_micro_unit_scores_invariant_to_chunking), ~1e-7 for
+    float32 production weights (tolerance-level equivalence).
     """
     n = len(ids_list)
     probs_parts: list[np.ndarray] = []
@@ -412,9 +472,8 @@ def forward_batch(
                     m = min(len(seq), int(lengths[i]))
                     padded[i, :m] = seq[:m]
                 ns_ids[name] = padded
-        x = embed_batch(w, ids, lengths, hs, ts, ns_ids=ns_ids)
         adj_c = adjacency[r0:r1] if adjacency is not None else None
-        enc, ff_w, ff_b = _encode_chunk(w, x, lengths, hs, ts, encoder, adj_c)
+        enc, ff_w, ff_b = _encode_chunk(w, ids, lengths, hs, ts, encoder, adj_c, ns_ids)
         logits = enc @ ff_w + ff_b
         # float32 at the external boundary regardless of compute dtype:
         # downstream schemas, the argmax, and the micro-unit quantization

@@ -139,7 +139,7 @@ def tacred_gazetteer_rows() -> list[tuple[str, str, str]]:
         ):
             phrase = " ".join(ex["token"][s : e + 1])
             eid = "ent:" + phrase.lower().replace(" ", "_")
-            for alias in {phrase, phrase.lower(), phrase.capitalize()}:
+            for alias in (phrase, phrase.lower(), phrase.capitalize()):
                 if alias not in seen:
                     seen.add(alias)
                     rows.append((alias, eid, ty))
@@ -207,7 +207,7 @@ def fixture_gazetteer_rows() -> list[tuple[str, str, str]]:
         for (start, end_ex) in ex["entities"]:
             phrase = " ".join(ex["tokens"][start:end_ex])
             eid = "ent:" + phrase.lower().replace(" ", "_")
-            for alias in {phrase, phrase.lower(), phrase.capitalize()}:
+            for alias in (phrase, phrase.lower(), phrase.capitalize()):
                 if alias not in seen:
                     seen.add(alias)
                     rows.append((alias, eid, "THING"))

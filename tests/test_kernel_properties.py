@@ -1,12 +1,17 @@
 """Property-based tests (hypothesis) for the numpy scoring kernels.
 
 The reference has no property tests (SURVEY §5); these pin the kernel
-invariants the engine's correctness rests on: the packed-GEMM CNN equals a
-naive per-window convolution, outputs are batch-composition independent,
-padding never leaks into scores, and offset indices stay in table range.
+invariants the engine's correctness rests on: the CNN scored from projected
+lookup tables equals a naive per-window convolution over the embedded
+input (for every offset family, multi-namespace weights, float32 and
+float64, and weights whose pad rows are nonzero), outputs are
+batch-composition independent, padding never leaks into scores, and offset
+indices stay in table range.
 """
 
 from __future__ import annotations
+
+import dataclasses
 
 import numpy as np
 from hypothesis import given, settings
@@ -24,6 +29,35 @@ from relex_spark.scoring.weights import build_fixture_weights
 
 VOCAB = [f"t{i}" for i in range(50)]
 W = build_fixture_weights(VOCAB, d_emb=16, d_off=4, num_filters=8, max_len=24)
+TAGS = [f"g{i}" for i in range(6)]
+
+
+def _weights(offset_type="relative", dtype="float64", namespaces=False, archive=False):
+    w = build_fixture_weights(
+        VOCAB, d_emb=16, d_off=4, num_filters=8, max_len=24,
+        offset_type=offset_type, compute_dtype=dtype,
+        namespaces={"ner": (TAGS, 3), "pos": (TAGS, 2)} if namespaces else None,
+    )
+    if archive:
+        # A trained archive's token Embedding has no padding_idx, and its
+        # offset tables need not keep row 0 zero: pad rows are arbitrary.
+        emb, head, tail = w.emb.copy(), w.head_offset_emb.copy(), w.tail_offset_emb.copy()
+        emb[0], head[0], tail[0] = 0.7, -0.3, 0.9
+        w = dataclasses.replace(w, emb=emb, head_offset_emb=head, tail_offset_emb=tail)
+    return w
+
+
+CNN_WEIGHTS = {
+    f"{name}-{dtype}": _weights(dtype=dtype, **kw)
+    for name, kw in {
+        "relative": {},
+        "sine": {"offset_type": "sine"},
+        "entity_only": {"offset_type": "entity_only"},
+        "namespaces": {"namespaces": True},
+        "archive": {"archive": True},
+    }.items()
+    for dtype in ("float64", "float32")
+}
 
 
 def naive_cnn(w, x, lengths):
@@ -70,10 +104,16 @@ def batches(draw, max_rows=6, max_len=20):
 def test_cnn_matches_naive_convolution(batch):
     ids_list, heads, tails = batch
     ids, lengths = pad_batch([[i + 2 for i in r] for r in ids_list])
-    x = np.array(embed_batch(W, ids, lengths, heads, tails))
-    got = cnn_encode(W, x, lengths)
-    want = naive_cnn(W, x, lengths)
-    np.testing.assert_allclose(got, want, rtol=1e-4, atol=1e-5)
+    valid = np.arange(ids.shape[1])[None, :] < lengths[:, None]
+    for name, w in CNN_WEIGHTS.items():
+        ns_ids = None
+        if w.extra.get("ns_emb"):
+            ns_ids = {ns: np.where(valid, (ids * j) % (len(TAGS) + 2), 0)
+                      for j, ns in ((3, "ner"), (5, "pos"))}
+        x = np.array(embed_batch(w, ids, lengths, heads, tails, ns_ids=ns_ids))
+        got = cnn_encode(w, ids, lengths, heads, tails, ns_ids)
+        want = naive_cnn(w, x, lengths)
+        np.testing.assert_allclose(got, want, rtol=1e-4, atol=1e-5, err_msg=name)
 
 
 @settings(max_examples=25, deadline=None)

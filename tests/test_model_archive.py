@@ -29,8 +29,9 @@ def test_archive_parameter_recovery(ref_weights):
     # nf=2, 7 labels, vocab 114 lines + padding)
     assert w.emb.shape == (115, 2)
     # NOTE: AllenNLP's token Embedding has no padding_idx (row 0 is random
-    # init; padding is handled by the downstream mask) — embed_batch zeroes
-    # padded positions, so a nonzero pad row never leaks into scores.
+    # init; padding is handled by the downstream mask) — pad positions never
+    # fall inside a valid CNN window (and embed_batch zeroes them for the
+    # other encoders), so a nonzero pad row never leaks into scores.
     assert w.head_offset_emb.shape == (101, 2)
     assert np.all(w.head_offset_emb[0] == 0.0)  # padding_idx=0
     assert set(w.cnn_filters) == {2}

@@ -49,6 +49,19 @@ def test_filtered_setting_and_hash_replay(spark):
     assert expected  # the fixture must actually produce negatives
 
 
+def test_null_keyed_triple_yields_no_negatives(spark):
+    """A NULL in any key column makes the pick hash NULL, so that triple
+    gets no negatives; the non-null triples beside it are unaffected."""
+    good = [("e0", "likes", "e1")]
+    rows = good + [(None, "likes", "e1"), ("e0", None, "e2"), ("e3", "made", None)]
+    ents = _ents(spark, ENTITIES)
+    out = negative_sample_triples(_triples(spark, rows), ents, k=5).collect()
+    assert out, "the non-null triple must still produce negatives"
+    assert {(r["subj"], r["pred"]) for r in out} == {("e0", "likes")}
+    alone = negative_sample_triples(_triples(spark, good), ents, k=5).collect()
+    assert sorted(map(tuple, out)) == sorted(map(tuple, alone))
+
+
 def test_per_positive_bound_and_partitioning_independence(spark):
     pos_rows = [(f"s{i}", "p", f"e{i % 3}") for i in range(20)]
     pos = _triples(spark, pos_rows)

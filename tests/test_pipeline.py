@@ -5,6 +5,7 @@ evaluation self-consistency."""
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from relex_spark.operators.canonicalize import (
@@ -30,6 +31,23 @@ def test_connected_components_minimum_label(spark):
     )
     comp = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "lone": "lone"}
+
+
+def test_connected_components_paths_share_string_schema(spark):
+    """The driver-side (small graph) and distributed paths return the same
+    STRING schema and labels; a non-string edge table fails on both paths
+    with the cast named."""
+    ints = spark.createDataFrame([(2, 1), (3, 2), (10, 9)], "src bigint, dst bigint")
+    for threshold in (4096, 0):
+        with pytest.raises(TypeError, match="cast"):
+            connected_components(ints, local_threshold=threshold)
+    strs = ints.select(F.col("src").cast("string"), F.col("dst").cast("string"))
+    local, dist = (connected_components(strs, local_threshold=t) for t in (4096, 0))
+    assert local.schema.simpleString() == dist.schema.simpleString()
+    assert local.schema.simpleString() == "struct<node:string,component:string>"
+    labels = {r["node"]: r["component"] for r in local.collect()}
+    assert labels == {r["node"]: r["component"] for r in dist.collect()}
+    assert labels == {"1": "1", "2": "1", "3": "1", "9": "10", "10": "10"}
 
 
 def test_checkpoint_resume_equivalence(spark):
