@@ -94,64 +94,3 @@ def build_label_vocab(labels_df: DataFrame, label_col: str = "label") -> DataFra
 def collect_vocab(vocab_df: DataFrame, key: str = "token") -> dict[str, int]:
     """Collect a (small, post-filter) vocab for broadcasting (V3 map)."""
     return {r[key]: r["id"] for r in vocab_df.select(key, "id").collect()}
-
-
-def token_id_expr(
-    tokens_col,
-    token_to_id: dict[str, int],
-    *,
-    lowercase: bool = True,
-    oov_id: int = 1,
-    target_bucket_entries: int = 8,
-) -> F.Column:
-    """V3, JVM-side: dictionary-encode ``ARRAY<STRING>`` tokens to
-    ``ARRAY<INT>`` ids without crossing the Python boundary — semantics
-    bit-identical to ``ModelWeights.token_ids`` (optional lowercase, OOV
-    fallback, relex/predictors single_id lowercase_tokens behavior).
-
-    Spark has no hash-map literal (``GetMapValue`` on a map literal is a
-    linear scan), so the vocab is sharded into B buckets keyed by
-    ``crc32(token) % B`` — CRC-32 is computed identically driver-side
-    (``zlib.crc32``) and JVM-side (``F.crc32``, same standard polynomial)
-    — giving ~``target_bucket_entries`` key comparisons per token instead
-    of |V|. The whole bucket table is an all-literal expression, so
-    Catalyst constant-folds it into ONE array<map> literal shared by every
-    row; per-token work is crc32 + O(1) array index + a short map scan.
-
-    Motivation (BENCH/BASELINE.md 8→32 analysis): shipping token *strings*
-    through the Arrow boundary into ``mapInPandas`` costs serialize +
-    transfer + per-token Python dict lookups; encoding JVM-side sends
-    int32 arrays instead and drops the hot-path string columns entirely.
-    """
-    import zlib
-
-    items = list(token_to_id.items())
-    n_buckets = max(1, (len(items) + target_bucket_entries - 1) // target_bucket_entries)
-    buckets: list[list[tuple[str, int]]] = [[] for _ in range(n_buckets)]
-    # Bucket by the EXACT stored key: the runtime lookup key (lowered when
-    # lowercase) only ever matches a stored key it is byte-equal to, so
-    # equal keys hash to the same bucket by construction. A mixed-case
-    # vocab key is unreachable under lowercase=True in the Python path
-    # (dict.get(t.lower())) and stays unreachable here — parity preserved.
-    for tok, tid in items:
-        buckets[zlib.crc32(tok.encode("utf-8")) % n_buckets].append((tok, tid))
-    bucket_cols = []
-    for b in buckets:
-        if not b:
-            # a well-typed non-empty map; the sentinel key contains \x00 and
-            # cannot collide with a real token lookup
-            b = [("\x00relex:empty-bucket", oov_id)]
-        bucket_cols.append(
-            F.create_map(*[F.lit(x) for kv in sorted(b) for x in kv])
-        )
-    table = F.array(*bucket_cols)
-
-    def lookup(t: F.Column) -> F.Column:
-        key = F.lower(t) if lowercase else t
-        idx = (F.pmod(F.crc32(F.encode(key, "UTF-8")), F.lit(n_buckets)) + 1).cast("int")
-        return F.coalesce(
-            F.try_element_at(F.element_at(table, idx), key),
-            F.lit(oov_id),
-        ).cast("int")
-
-    return F.transform(tokens_col, lookup)

@@ -49,6 +49,7 @@ from relex_spark.operators.canonicalize import (
 )
 from relex_spark.scoring.scorer import broadcast_weights, score_candidates
 from relex_spark.scoring.weights import ModelWeights, build_fixture_weights
+from relex_spark.sources.localdim import local_dim
 from relex_spark.sources.sinks import read_stage, stage_is_complete, write_stage
 from relex_spark.sources.transcripts import (
     fixture_gazetteer_rows,
@@ -70,14 +71,9 @@ class KGPipelineConfig:
     # measures a >10^4 duplication factor — and the model is a pure
     # function of (tokens, spans), so scoring duplicates is pure waste.
     # Costs one shuffle (map-side-combined dedup) + one join; wins whenever
-    # the duplication factor exceeds ~1.2. Batch-only: on a stream the
-    # dedup/join would need unbounded state, so it is skipped there.
+    # the duplication factor exceeds ~1.2. Batch-only: skipped on a stream
+    # (see _score_each_distinct_input, shared with the TACRED pipeline).
     score_distinct: bool = True
-    # Dictionary-encode tokens to int ids JVM-side before the Arrow
-    # boundary (scorer.score_candidates jvm_token_ids): identical outputs,
-    # int32 arrays instead of strings through mapInPandas. Off by default
-    # pending the measured verdict in BENCH/BASELINE.md §Arrow-transport.
-    jvm_token_ids: bool = False
     gazetteer_rows: list[tuple[str, str, str]] = field(
         default_factory=fixture_gazetteer_rows
     )
@@ -188,6 +184,51 @@ def preprocess_candidates(candidates: DataFrame, max_len: int) -> DataFrame:
     )
 
 
+def _score_each_distinct_input(
+    candidates: DataFrame,
+    weights_bc,
+    keep: list[str],
+    encoder: str,
+    distinct: bool,
+) -> DataFrame:
+    """Dedup-before-inference for both KG pipelines: score each distinct
+    score_key input once and join the result back to every occurrence.
+    With ``distinct`` false, or on a stream (the dedup/join would need
+    unbounded state), scoring runs in place and the chain stays
+    zero-shuffle.
+
+    dropDuplicates compiles to a first()-aggregate with map-side partial
+    combine, so hot duplicate keys collapse before the shuffle; AQE
+    broadcasts the scored-distinct side of the join back when it is small.
+    """
+    if not distinct or candidates.isStreaming:
+        return score_candidates(
+            candidates, weights_bc, keep_columns=keep, encoder=encoder
+        )
+    # namespaces come from the weights, exactly as score_candidates derives
+    # its feature columns, so the key and the scored features agree
+    feat, key = score_key(
+        encoder, sorted(weights_bc.value.extra.get("ns_emb") or {})
+    )
+    # Materialize the keyed candidates once (an EAGER local checkpoint): both
+    # the distinct branch and the join-back side consume keyed, and without
+    # it the whole narrow upstream chain executes TWICE (measured +30% wall
+    # on the scaling corpus). Eager, not lazy (r6, measured): with a LAZY
+    # checkpoint the two consumer stages are submitted concurrently and race
+    # to materialize the same partitions — 148s summed CPU vs 27s eager on
+    # the sf0.1 bench corpus (wall 11.7s vs 3.3s). On a cluster this
+    # materialization is the "preprocessed candidates" stage the
+    # checkpoint_dir protocol writes anyway.
+    keyed = candidates.withColumn("score_key", key).localCheckpoint(eager=True)
+    uniq = keyed.select("score_key", *feat).dropDuplicates(["score_key"])
+    scored_uniq = score_candidates(
+        uniq, weights_bc, keep_columns=["score_key"], encoder=encoder
+    )
+    return keyed.select("score_key", *keep).join(scored_uniq, "score_key").drop(
+        "score_key"
+    )
+
+
 def build_triples(
     transcripts: DataFrame,
     config: KGPipelineConfig | None = None,
@@ -202,47 +243,12 @@ def build_triples(
     pairs = generate_candidate_pairs(mentions, config.max_pairs_per_turn)
     pairs = preprocess_candidates(pairs, config.max_len)
     weights_bc = broadcast_weights(transcripts, config.resolved_weights())
-    keep = ["conv_id", "turn_idx", "id", "subj", "obj"]
-    if config.score_distinct and not transcripts.isStreaming:
-        # Dedup-before-inference: the scores are a pure function of
-        # (tokens, spans), so run the expensive mapInPandas stage once per
-        # distinct input. dropDuplicates compiles to a first()-aggregate
-        # with map-side partial combine, so hot duplicate keys collapse
-        # before the shuffle; the join back is on the same key, and AQE
-        # broadcasts the scored-distinct side when it is small.
-        feat, key = score_key(
-            config.encoder, sorted((weights_bc.value.extra.get("ns_emb") or {}))
-        )
-        # Materialize the keyed candidates once (EAGER localCheckpoint):
-        # both the distinct branch and the join-back side consume pairs_k,
-        # and without it the whole narrow scan→detect→pairs chain executes
-        # TWICE (measured +30% wall on the scaling corpus). Eager, not
-        # lazy (r6, measured): with a LAZY checkpoint the two consumer
-        # stages are submitted concurrently and race to materialize the
-        # same partitions — 148s summed CPU vs 27s eager on the sf0.1
-        # bench corpus (wall 11.7s vs 3.3s). On a cluster this
-        # materialization is the "preprocessed candidates" stage the
-        # checkpoint_dir protocol writes anyway.
-        pairs_k = pairs.withColumn("score_key", key).localCheckpoint(
-            eager=True
-        )
-        uniq = pairs_k.select("score_key", *feat).dropDuplicates(["score_key"])
-        scored_uniq = score_candidates(
-            uniq,
-            weights_bc,
-            keep_columns=["score_key"],
-            encoder=config.encoder,
-            jvm_token_ids=config.jvm_token_ids,
-        )
-        return pairs_k.select("score_key", *keep).join(
-            scored_uniq, "score_key"
-        ).drop("score_key")
-    return score_candidates(
+    return _score_each_distinct_input(
         pairs,
         weights_bc,
-        keep_columns=keep,
-        encoder=config.encoder,
-        jvm_token_ids=config.jvm_token_ids,
+        ["conv_id", "turn_idx", "id", "subj", "obj"],
+        config.encoder,
+        config.score_distinct,
     )
 
 
@@ -272,7 +278,7 @@ def run_kg_pipeline(
     scored = _stage("scored_triples", lambda: build_triples(transcripts, config))
 
     gaz = gazetteer_df(spark)
-    # createDataFrame from 40 rows; components over alias graph are tiny.
+    # 40-row local_dim; components over the alias graph are tiny.
     components = connected_components(alias_edges_from_gazetteer(gaz))
 
     canonical = canonicalize_triples(
@@ -413,15 +419,12 @@ def tacred_scored_candidates(
     prune: int = 1,
     weights: ModelWeights | None = None,
     score_distinct: bool = True,
-    jvm_token_ids: bool = False,
 ) -> DataFrame:
     """TACRED candidates → GCN-scored candidates (M12), with the same
     dedup-before-inference shuffle as the SemEval flagship (the score key
     includes the adjacency for graph encoders — score_key("gcn")).
 
     Returns conv_id, turn_idx, id, subj, obj, label, score."""
-    from relex_spark.scoring.scorer import score_candidates
-
     cands = tacred_planted_candidates(
         spark, transcripts, max_len=max_len, masking_mode=masking_mode,
         prune=prune,
@@ -429,31 +432,12 @@ def tacred_scored_candidates(
     weights_bc = broadcast_weights(
         spark, weights if weights is not None else tacred_pipeline_weights(masking_mode)
     )
-    keep = ["conv_id", "turn_idx", "id", "subj", "obj"]
-    if score_distinct and not transcripts.isStreaming:
-        feat, key = score_key("gcn")
-        # eager for the same reason as build_triples: concurrent consumer
-        # stages race a lazy checkpoint's materialization
-        cands_k = cands.withColumn("score_key", key).localCheckpoint(
-            eager=True
-        )
-        uniq = cands_k.select("score_key", *feat).dropDuplicates(["score_key"])
-        scored_uniq = score_candidates(
-            uniq,
-            weights_bc,
-            keep_columns=["score_key"],
-            encoder="gcn",
-            jvm_token_ids=jvm_token_ids,
-        )
-        return cands_k.select("score_key", *keep).join(
-            scored_uniq, "score_key"
-        ).drop("score_key")
-    return score_candidates(
+    return _score_each_distinct_input(
         cands,
         weights_bc,
-        keep_columns=keep,
-        encoder="gcn",
-        jvm_token_ids=jvm_token_ids,
+        ["conv_id", "turn_idx", "id", "subj", "obj"],
+        "gcn",
+        score_distinct,
     )
 
 
@@ -482,7 +466,8 @@ def run_tacred_kg_pipeline(
         spark, transcripts, max_len=max_len, masking_mode=masking_mode,
         prune=prune, weights=weights, score_distinct=score_distinct,
     )
-    gaz = spark.createDataFrame(
+    gaz = local_dim(
+        spark,
         tacred_gazetteer_rows(),
         "surface string, entity_id string, entity_type string",
     )

@@ -62,7 +62,6 @@ def score_candidates(
     with_probs: bool = False,
     with_representation: bool = False,
     bucket_by_length: bool = True,
-    jvm_token_ids: bool = False,
 ) -> DataFrame:
     """Score (tokens, head, tail) candidates → append ``label``, ``score``.
 
@@ -70,15 +69,9 @@ def score_candidates(
     ``head_end``, ``tail_start``, ``tail_end`` (inclusive ints).
     ``keep_columns`` (default: all non-feature columns) pass through.
 
-    ``jvm_token_ids=True`` dictionary-encodes tokens (and namespace tag
-    sequences) to int ids in the JVM via a constant-folded bucketed vocab
-    literal (operators.vocab.token_id_expr) and drops the string feature
-    columns before the Arrow boundary: the ``mapInPandas`` input carries
-    ``array<int>`` instead of ``array<string>``, and the kernel skips its
-    per-token Python dict lookups. Outputs are bit-identical either way
-    (the id sequences match ``ModelWeights.token_ids`` exactly — pinned by
-    tests/test_scoring.py); the switch only moves work across the Python
-    boundary, so it exists to measure/raise Arrow-transport efficiency.
+    Tokens (and namespace tag sequences) cross the Arrow boundary as
+    strings and resolve to ids against the broadcast vocab inside the
+    kernel; the lookup is a small share of a forward pass.
     """
     feature_cols = ["tokens", "head_start", "head_end", "tail_start", "tail_end"]
     if encoder in ("gcn", "gat"):
@@ -91,22 +84,6 @@ def score_candidates(
         keep_columns = [c for c in candidates.columns if c not in feature_cols]
 
     in_df = candidates.select(*keep_columns, *feature_cols)
-    ids_col = "tokens"
-    if jvm_token_ids:
-        from relex_spark.operators.vocab import token_id_expr
-
-        w_local = weights_bc.value  # driver-side: the cached local object
-        ids_col = "__token_ids"
-        in_df = in_df.withColumn(
-            ids_col,
-            token_id_expr("tokens", w_local.token_to_id, lowercase=w_local.lowercase),
-        ).drop("tokens")
-        for ns in ns_names:
-            # ns_ids semantics: exact-case get with OOV fallback
-            in_df = in_df.withColumn(
-                ns,
-                token_id_expr(ns, w_local.extra["ns_vocab"][ns], lowercase=False),
-            )
     # B1 bucket-iterator analogue: reduces padding waste, never changes
     # results (kernel outputs are batch-independent). Sorting isn't allowed
     # on streaming DataFrames — skipped there (only padding efficiency is
@@ -123,9 +100,9 @@ def score_candidates(
     # istically; a 64-bit collision merely leaves one tie unordered.
     if bucket_by_length and not candidates.isStreaming:
         in_df = in_df.sortWithinPartitions(
-            F.size(ids_col),
+            F.size("tokens"),
             F.xxhash64(
-                F.col(ids_col),
+                F.col("tokens"),
                 F.col("head_start"),
                 F.col("head_end"),
                 F.col("tail_start"),
@@ -152,24 +129,15 @@ def score_candidates(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if jvm_token_ids:
-                # ids arrived pre-encoded (array<int> through Arrow)
-                ids_list = list(pdf[ids_col])
-                ns_ids_list = (
-                    {name: list(pdf[name]) for name in ns_names}
-                    if ns_names
-                    else None
-                )
-            else:
-                ids_list = [w.token_ids(list(toks)) for toks in pdf["tokens"]]
-                ns_ids_list = (
-                    {
-                        name: [w.ns_ids(name, list(tags)) for tags in pdf[name]]
-                        for name in ns_names
-                    }
-                    if ns_names
-                    else None
-                )
+            ids_list = [w.token_ids(list(toks)) for toks in pdf["tokens"]]
+            ns_ids_list = (
+                {
+                    name: [w.ns_ids(name, list(tags)) for tags in pdf[name]]
+                    for name in ns_names
+                }
+                if ns_names
+                else None
+            )
             head = pdf[["head_start", "head_end"]].to_numpy(dtype=np.int64)
             tail = pdf[["tail_start", "tail_end"]].to_numpy(dtype=np.int64)
             adjacency = (

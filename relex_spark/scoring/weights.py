@@ -159,10 +159,7 @@ class ModelWeights:
         """V3: token→id with OOV fallback; single_id lowercase_tokens
         semantics (tests/fixtures/basic_relation_classifier.jsonnet:5-8).
 
-        A None element maps to OOV — matching the JVM path
-        (operators.vocab.token_id_expr: crc32(NULL) is NULL, coalesce →
-        oov_id), so the documented bit-identity between jvm_token_ids=True
-        and this lookup holds on dirty input too."""
+        A None element (dirty input) maps to OOV instead of raising."""
         t2i = self.token_to_id
         if self.lowercase:
             return [

@@ -73,13 +73,8 @@ def worker(cpus: int) -> None:
     # level but collapses the compute so the job turns scan/bandwidth-
     # bound, which on this single-memory-bus VM (docs/SCALE.md §7) measures
     # the shared 30 GB/s roof rather than the plan.
-    # RELEX_SCALING_JVM_IDS=1: dictionary-encode tokens to int ids JVM-side
-    # before the Arrow boundary (identical outputs — tests/test_scoring.py
-    # pins bit-equality). The A/B lever for the 8→32 transport-vs-bandwidth
-    # decomposition in BENCH/BASELINE.md.
-    jvm_ids = os.environ.get("RELEX_SCALING_JVM_IDS", "") == "1"
-    config = KGPipelineConfig(score_distinct=False, jvm_token_ids=jvm_ids, compute_dtype="float32")
-    config_dedup = KGPipelineConfig(score_distinct=True, jvm_token_ids=jvm_ids, compute_dtype="float32")
+    config = KGPipelineConfig(score_distinct=False, compute_dtype="float32")
+    config_dedup = KGPipelineConfig(score_distinct=True, compute_dtype="float32")
     config_dedup.weights = config.resolved_weights()  # share the memoized build
 
     # untimed prep: constant-size entity dimension (see module docstring)
@@ -114,7 +109,6 @@ def worker(cpus: int) -> None:
         json.dumps(
             {
                 "cpus": cpus,
-                "jvm_token_ids": jvm_ids,
                 "n_turns": n_turns,
                 "scored_triples": n_triples,
                 "sec": round(sec, 2),

@@ -2,7 +2,9 @@
 """Summarize BENCH/scaling_r4_480k.jsonl: per-level throughput for the
 base and jvm_token_ids variants, N→4N scaling efficiencies for both, and
 the A/B transport delta at each level. Pure arithmetic over the raw
-records (which stay committed alongside); used to fill BENCH/BASELINE.md."""
+records (which stay committed alongside); used to fill BENCH/BASELINE.md.
+The jvm_token_ids option has since been removed; its records stay as the
+published evidence for that decision."""
 
 from __future__ import annotations
 

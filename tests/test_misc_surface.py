@@ -323,6 +323,27 @@ def test_detect_mentions_rejects_duplicate_surfaces(spark):
     assert {m["entity_id"] for m in ments} == {"ent:q1", "ent:q2"}
 
 
+def test_local_dim_under_escaped_string_literals(spark):
+    """Under spark.sql.parser.escapedStringLiterals=true a quoted cell
+    cannot be rendered safely: local_dim must fail loudly naming the conf,
+    while quote-free rows still round-trip exactly."""
+    import pytest
+
+    from relex_spark.sources.localdim import local_dim
+
+    conf = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        with pytest.raises(ValueError, match=conf):
+            local_dim(spark, [("O'Brien", 1)], "surface string, n int")
+        rows = [("New York", 1), ("ent:q1", 2), (None, 3)]
+        got = local_dim(spark, rows, "surface string, n int").collect()
+        assert [tuple(r) for r in got] == rows
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_detect_mentions_join_keeps_tokens_on_no_hit_turns(spark):
     """A turn with no gazetteer hit must still carry its real tokens
     through the left join (only the mentions array is []-repaired)."""

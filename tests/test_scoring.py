@@ -227,91 +227,6 @@ def test_multi_namespace_scoring_matches_oracle(spark):
         assert np.allclose(got[r["id"]]["probs"], probs, atol=1e-4), r["id"]
 
 
-def test_jvm_token_id_expr_matches_python_lookup(spark, weights):
-    """operators.vocab.token_id_expr ≡ ModelWeights.token_ids semantics:
-    lowercase, OOV fallback, empty arrays, unicode — the invariant the
-    jvm_token_ids scoring path rests on."""
-    from relex_spark.operators.vocab import token_id_expr
-
-    vocab = weights.token_to_id
-    some_known = [t for t in vocab if t not in ("<pad>", "<oov>")][:5]
-    rows = [
-        ([w.upper() for w in some_known] + ["ZZZ-unknown", "", "café"],),
-        ([],),
-        (some_known,),
-    ]
-    df = spark.createDataFrame(rows, "tokens array<string>")
-    got = [
-        list(r["ids"])
-        for r in df.select(token_id_expr("tokens", vocab).alias("ids")).collect()
-    ]
-    exp = [weights.token_ids(r[0]) for r in rows]
-    assert got == exp
-    # exact-case namespace variant (ns_ids semantics: no lowering)
-    got_nc = [
-        list(r["ids"])
-        for r in df.select(
-            token_id_expr("tokens", vocab, lowercase=False).alias("ids")
-        ).collect()
-    ]
-    exp_nc = [[vocab.get(t, 1) for t in r[0]] for r in rows]
-    assert got_nc == exp_nc
-
-
-def test_jvm_token_ids_pipeline_bit_identical(spark, weights):
-    """build_triples(jvm_token_ids=True) ≡ the Python-lookup path on the
-    planted corpus, both score_distinct settings — same rows, labels, and
-    float32 scores bit-for-bit (the encoding only moves the token→id
-    lookup across the Arrow boundary)."""
-    t = synthesize_transcripts(spark, n_convs=12)
-    out_cols = ["id", "subj", "obj", "label", "score"]
-
-    for distinct in (False, True):
-        a = build_triples(
-            t, KGPipelineConfig(weights=weights, score_distinct=distinct)
-        )
-        b = build_triples(
-            t,
-            KGPipelineConfig(
-                weights=weights, score_distinct=distinct, jvm_token_ids=True
-            ),
-        )
-        ra = sorted(map(tuple, a.select(*out_cols).collect()))
-        rb = sorted(map(tuple, b.select(*out_cols).collect()))
-        assert ra == rb and ra, f"mismatch at score_distinct={distinct}"
-    # the encoded plan must not carry the token strings into mapInPandas
-    plan = b._jdf.queryExecution().optimizedPlan().toString()
-    assert "__token_ids" in plan
-
-
-def test_jvm_token_ids_multi_namespace(spark):
-    """jvm_token_ids with M1 multi-namespace weights: ns tag sequences are
-    JVM-encoded too (exact-case semantics) and probs stay identical."""
-    from relex_spark.plans.driver_queries import _ns_weights
-    from relex_spark.scoring.scorer import broadcast_weights, score_candidates
-    from relex_spark.sources.readers import read_tacred_json, tacred_to_candidates
-
-    w = _ns_weights()
-    cands = tacred_to_candidates(
-        read_tacred_json(spark, "relex_spark/data/tacred_fixture.json"), max_len=100
-    )
-    wbc = broadcast_weights(spark, w)
-    base = score_candidates(
-        cands, wbc, keep_columns=["id"], encoder="cnn", with_probs=True
-    ).collect()
-    enc = score_candidates(
-        cands,
-        wbc,
-        keep_columns=["id"],
-        encoder="cnn",
-        with_probs=True,
-        jvm_token_ids=True,
-    ).collect()
-    a = {r["id"]: (r["label"], list(r["probs"])) for r in base}
-    b = {r["id"]: (r["label"], list(r["probs"])) for r in enc}
-    assert a == b and len(a) == 3
-
-
 def test_micro_unit_scores_invariant_to_chunking_and_order(weights, monkeypatch):
     """The golden-oracle determinism contract: with float64 fixture weights,
     micro-unit-quantized scores must be IDENTICAL regardless of forward-

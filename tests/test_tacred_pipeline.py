@@ -124,16 +124,15 @@ def test_tacred_masking_mode_semantics(spark, transcripts):
             assert g["tokens"][i] == "__OBJ__"
 
 
-def test_tacred_jvm_token_ids_bit_identical(spark, transcripts):
-    """jvm_token_ids through the TACRED/GCN path ≡ the Python-lookup path
-    (graph encoder + masked-token vocab + dedup-before-inference)."""
+def test_tacred_score_distinct_parity(spark, transcripts):
+    """Dedup-before-inference on the TACRED/GCN path (score key includes
+    the adjacency) is invisible in the output: identical rows, labels and
+    float32 scores with score_distinct on and off."""
     from relex_spark.plans.kg_pipeline import tacred_scored_candidates
 
     cols = ["id", "subj", "obj", "label", "score"]
-    a = tacred_scored_candidates(spark, transcripts).select(*cols)
-    b = tacred_scored_candidates(spark, transcripts, jvm_token_ids=True).select(
-        *cols
-    )
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
+    on = tacred_scored_candidates(spark, transcripts, score_distinct=True)
+    off = tacred_scored_candidates(spark, transcripts, score_distinct=False)
+    ra = sorted(map(tuple, on.select(*cols).collect()))
+    rb = sorted(map(tuple, off.select(*cols).collect()))
     assert ra == rb and ra
