@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from relex_spark.functions.text import portable_hash64, split_ws
+from relex_spark.sources.localdim import local_dim
 
 
 def _default_parallel_units(docs: DataFrame) -> int:
@@ -165,10 +166,10 @@ def token_budget_mix(
             f"budgets must be positive (every budgeted source keeps at "
             f"least one doc by contract), got {bad}"
         )
-    spark = docs.sparkSession
-    bdf = spark.createDataFrame(
+    bdf = local_dim(
+        docs.sparkSession,
         sorted((s, int(b)) for s, b in budgets.items()),
-        schema="source string, __budget bigint",
+        "source string, __budget bigint",
     )
     h = portable_hash64(F.concat(F.lit("mix:"), F.col(id_col).cast("string")))
     base = (

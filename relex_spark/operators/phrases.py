@@ -17,7 +17,7 @@ merge exactly the greedy left-to-right set (pinned by unit test on
 adjacent-run inputs).
 
 Scale shape per iteration: one bigram explode + count (map-side combined)
-and one narrow rewrite; the top pair is a 1-row TakeOrdered collect.
+and one narrow rewrite; the top pairs are a small TakeOrdered collect.
 Iterations are bounded (n_merges), and each rewritten frame is
 localCheckpoint'd so lineage stays flat.
 """
@@ -44,52 +44,25 @@ def learn_phrases(
     n_merges: int = 5,
     text_col: str = "text",
     min_count: int = 2,
+    batch_size: int = 1,
 ) -> list[Row]:
     """Learn ``n_merges`` merges; returns [(rank, pair, n), ...] where rank
     is 1-based merge order, pair is 'a b', and n its count at merge time.
     Ties break lexicographically on the pair (deterministic). Stops early
-    when no pair reaches ``min_count``."""
-    cur = docs.select(F.col(text_col).alias("text"))
-    merges: list[Row] = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            cur.select(F.explode(word_bigrams(split_ws(F.col("text")))).alias("pair"))
-            .groupBy("pair")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") >= min_count)
-            .orderBy(F.desc("n"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        pair, n = top[0]["pair"], top[0]["n"]
-        merges.append(Row(rank=rank, pair=pair, n=n))
-        cur = cur.select(
-            merge_pair_in_text(F.col("text"), pair).alias("text")
-        ).localCheckpoint(eager=False)
-    return merges
+    when no pair reaches ``min_count``.
 
-
-def learn_phrases_batched(
-    docs: DataFrame,
-    n_merges: int = 5,
-    text_col: str = "text",
-    min_count: int = 2,
-    batch_size: int = 8,
-) -> list[Row]:
-    """Tokenizer-scale variant of ``learn_phrases``: per corpus pass, merge
-    up to ``batch_size`` TOKEN-DISJOINT pairs from the frequency top list,
-    so learning M merges costs O(M / batch_size) corpus passes instead of
-    O(M) — the driver loop stops dominating at the 10^3-10^4 merges a real
-    tokenizer build needs.
+    ``batch_size=1`` is the word2phrase loop: one merge per corpus pass.
+    At tokenizer scale, ``batch_size>1`` merges up to that many
+    TOKEN-DISJOINT pairs from the frequency top list per pass, so M merges
+    cost O(M / batch_size) passes instead of O(M) — the driver loop stops
+    dominating at the 10^3-10^4 merges a real tokenizer build needs.
 
     Token-disjointness is what makes the batch safe: merging 'a b' can only
     create/destroy bigrams that contain 'a', 'b', or the new token 'a_b',
     so the counts of pairs sharing no token with it are invariant — each
     accepted pair's published count is exactly its merge-time count, and
-    when the top pairs are mutually disjoint the result is IDENTICAL to the
-    sequential loop (pinned by test). Pairs that interact with an earlier
+    when the top pairs are mutually disjoint the result is IDENTICAL to
+    ``batch_size=1`` (pinned by test). Pairs that interact with an earlier
     acceptance are deferred to the next pass (where sequential order may
     differ from the one-at-a-time loop — the standard batched-merge
     trade-off, same as batched BPE trainers).

@@ -29,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from relex_spark.operators.similarity import _dot, _norm, ivf_assign, seeded_centroids
+from relex_spark.operators.similarity import (
+    cosine_pairs,
+    cosine_side,
+    ivf_assign,
+    seeded_centroids,
+)
 
 U6 = 1_000_000
 
@@ -87,26 +92,18 @@ def semantic_dedup(
     seeds = seeded_centroids(vectors, n_clusters, id_col, vec_col)
     first = ivf_assign(base, seeds, nprobe=1, id_col="id", vec_col="v")
     refined = lloyd_refine_u6(first)
-    final = (
-        ivf_assign(base, refined, nprobe=1, id_col="id", vec_col="v")
-        .select(F.col("id"), F.col("v"), F.col("centroid_id").alias("cluster_id"))
-        # three consumers (both prune sides + the output join): without the
-        # checkpoint the scan + k-centroid argmin would recompute each time
-        .localCheckpoint(eager=False)
-    )
-    a = final.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), "cluster_id"
-    )
-    b = final.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), "cluster_id"
-    )
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))), 6
-    )
+    # side projection (id, v, norm, key = cluster id) built once: three
+    # consumers (both prune sides + the output join) read the checkpoint,
+    # so the scan, the k-centroid argmin and the norm run once per row
+    final = cosine_side(
+        ivf_assign(base, refined, nprobe=1, id_col="id", vec_col="v"),
+        "id",
+        "v",
+        F.col("centroid_id"),
+    ).localCheckpoint(eager=False)
     pruned_ids = (
-        a.join(b, "cluster_id")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(cos >= F.lit(threshold))
+        cosine_pairs(final, final, ordered=True)
+        .where(F.col("cos_sim") >= F.lit(threshold))
         .select(F.col("id_b").alias("id"))
         .distinct()
         .withColumn("__pruned", F.lit(True))
@@ -115,7 +112,7 @@ def semantic_dedup(
         final.join(pruned_ids, "id", "left")
         .select(
             F.col("id").alias("vec_id"),
-            F.col("cluster_id").cast("int").alias("cluster_id"),
+            F.col("key").cast("int").alias("cluster_id"),
             F.coalesce(F.col("__pruned"), F.lit(False)).alias("pruned"),
         )
     )

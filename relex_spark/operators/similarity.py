@@ -9,6 +9,13 @@
   the corpus-side bucket id becomes a partition/bucket key so a query only
   shuffles against its own buckets.
 
+Every exact-cosine comparison in the engine (these top-k paths,
+dedup.embedding_cosine_pairs, the SemDeDup prune) is ONE join:
+``cosine_side`` projects each side once to (id, v, norm[, block key]),
+``cosine_pairs`` compares the pairs the block key lets meet, and
+``rank_top_k`` ranks them. Blocking (brute force, LSH bucket, IVF list,
+cluster) only decides which pairs meet.
+
 Ranking determinism: rank on ROUND(cos, 6) with id tie-break, so float
 association order across engines cannot flip ranks.
 """
@@ -37,6 +44,66 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _cosine(a: Column, a_norm: Column, b: Column, b_norm: Column) -> Column:
+    return _dot(a, b) / (a_norm * b_norm)
+
+
+def cosine_side(
+    df: DataFrame, id_col: str, vec_col: str, key: Column | None = None
+) -> DataFrame:
+    """Side projection of the cosine join: (id, v, norm[, key]).
+
+    sqrt(Σv²) is a pure per-row quantity, so it is computed here, once per
+    row; inside the pair join both norm aggregates would run once per PAIR
+    (measured ≈2/3 of the join-stage CPU at 200 queries × 10k vectors).
+    ``key`` is an optional block key: only rows with equal keys are
+    paired."""
+    cols = [
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        _norm(F.col(vec_col)).alias("norm"),
+    ]
+    if key is not None:
+        cols.append(key.alias("key"))
+    return df.select(*cols)
+
+
+def cosine_pairs(a: DataFrame, b: DataFrame, ordered: bool) -> DataFrame:
+    """Exact cosine between two ``cosine_side`` projections:
+    (id_a, id_b, cos_sim), cos_sim = ROUND(dot / (norm_a * norm_b), 6).
+
+    Pairs need equal block keys when the sides carry one, and
+    ``id_a < id_b`` (``ordered``, a self-join reporting each pair once) or
+    ``id_a != id_b``. The norms multiply per pair in the same float order
+    as an inline per-pair norm, so cos_sim is bit-identical to it. A
+    broadcast hint on ``a`` carries through to the join."""
+    a, b = a.alias("a"), b.alias("b")
+    a_id, b_id = F.col("a.id"), F.col("b.id")
+    cond = (a_id < b_id) if ordered else (a_id != b_id)
+    if "key" in a.columns:
+        cond = (F.col("a.key") == F.col("b.key")) & cond
+    cos = _cosine(F.col("a.v"), F.col("a.norm"), F.col("b.v"), F.col("b.norm"))
+    return a.join(b, cond).select(
+        a_id.alias("id_a"), b_id.alias("id_b"), F.round(cos, 6).alias("cos_sim")
+    )
+
+
+def rank_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Per id_a, the k best ``cosine_pairs`` rows ranked (cos_sim DESC,
+    id_b ASC): (query_id, neighbor_id, rank, cos_sim)."""
+    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("id_a").alias("query_id"),
+            F.col("id_b").alias("neighbor_id"),
+            "rank",
+            "cos_sim",
+        )
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -48,37 +115,9 @@ def cosine_topk(
 
     The query side is expected to be small (broadcast); corpus scan is a
     single pass, ranking via per-query window."""
-    # Hoist each side's norm out of the pair loop: sqrt(Σv²) is a pure
-    # per-row quantity, and computing it inside the |Q|×|corpus| join
-    # re-evaluated both aggregates per PAIR (≈2/3 of the join-stage CPU at
-    # 200 queries × 10k vectors). Same expressions, same float order —
-    # sqrt once per row, multiplied per pair — so cos_sim is bit-identical.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    cos = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        6,
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    q = F.broadcast(cosine_side(queries, id_col, vec_col))
+    return rank_top_k(
+        cosine_pairs(q, cosine_side(corpus, id_col, vec_col), ordered=False), k
     )
 
 
@@ -111,12 +150,7 @@ def hyperplane_bucket(vec: Column, n_planes: int, dim: int, seed: str = "lsh") -
     signs = plane_signs(n_planes, dim, seed)
     bucket = F.lit(0).cast("int")
     for p in range(n_planes):
-        sarr = F.array(*[F.lit(s) for s in signs[p]])
-        proj = F.aggregate(
-            F.zip_with(vec, sarr, lambda v, s: v.cast("double") * s),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
+        proj = _dot(vec, F.array(*[F.lit(s) for s in signs[p]]))
         bucket = bucket + F.when(proj > 0, F.lit(2**p)).otherwise(0)
     return bucket
 
@@ -133,30 +167,13 @@ def lsh_bucketed_topk(
     """ANN: candidates share the query's hyperplane bucket; exact cosine
     rerank within the bucket. Recall < 1 by construction (probe only one
     bucket); scale path for corpora where brute force is infeasible."""
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        hyperplane_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
-    )
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        hyperplane_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
-    )
-    cos = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))),
-        6,
-    )
-    scored = (
-        F.broadcast(qb)
-        .join(cb, (qb["bucket"] == cb["bucket"]) & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    def side(df: DataFrame) -> DataFrame:
+        return cosine_side(
+            df, id_col, vec_col, hyperplane_bucket(F.col(vec_col), n_planes, dim)
+        )
+
+    return rank_top_k(
+        cosine_pairs(F.broadcast(side(queries)), side(corpus), ordered=False), k
     )
 
 
@@ -197,7 +214,7 @@ def ivf_assign(
     sims = F.transform(
         cents,
         lambda c: F.struct(
-            (-_dot(F.col("v"), c["cv"]) / (F.col("__vnorm") * c["cnorm"])).alias(
+            (-_cosine(F.col("v"), F.col("__vnorm"), c["cv"], c["cnorm"])).alias(
                 "nsim"
             ),
             c["cid"].alias("cid"),
@@ -265,32 +282,8 @@ def ivf_topk(
     cent_rows = seeded_centroids(corpus, n_centroids, id_col, vec_col).collect()
     lists = ivf_assign(corpus, cent_rows, nprobe=1, id_col=id_col, vec_col=vec_col)
     probes = ivf_assign(queries, cent_rows, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
-    cos = F.round(
-        _dot(F.col("qv"), F.col("cv2")) / (_norm(F.col("qv")) * _norm(F.col("cv2"))),
-        6,
-    )
-    cand = (
-        probes.select(
-            F.col("id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("centroid_id"),
-        )
-        .join(
-            lists.select(
-                F.col("id").alias("neighbor_id"),
-                F.col("v").alias("cv2"),
-                F.col("centroid_id"),
-            ),
-            "centroid_id",
-        )
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        # no dedupe needed: corpus-side nprobe=1 puts each neighbor in
-        # exactly one inverted list, so (query_id, neighbor_id) is unique
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    probed = cosine_side(probes, "id", "v", F.col("centroid_id"))
+    listed = cosine_side(lists, "id", "v", F.col("centroid_id"))
+    # no dedupe needed: corpus-side nprobe=1 puts each neighbor in exactly
+    # one inverted list, so (query_id, neighbor_id) is unique
+    return rank_top_k(cosine_pairs(probed, listed, ordered=False), k)

@@ -1,4 +1,5 @@
-"""Vocabulary operators (reference §2.4 V1–V3).
+"""Vocabulary operators (reference §2.4 V1–V2; V3 token→id indexing is
+``scoring.weights.ModelWeights.token_ids`` inside the kernel).
 
 The reference's AllenNLP ``Vocabulary`` is a driver-side dict built in one
 full pass. Here the counting pass is a distributed aggregation (map-side
@@ -90,7 +91,3 @@ def build_label_vocab(labels_df: DataFrame, label_col: str = "label") -> DataFra
         .withColumn("id", (F.row_number().over(w) - 1).cast("int"))
     )
 
-
-def collect_vocab(vocab_df: DataFrame, key: str = "token") -> dict[str, int]:
-    """Collect a (small, post-filter) vocab for broadcasting (V3 map)."""
-    return {r[key]: r["id"] for r in vocab_df.select(key, "id").collect()}

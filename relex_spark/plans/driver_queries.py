@@ -37,6 +37,7 @@ from relex_spark.functions.text import (
     truncate_tokens,
 )
 from relex_spark.metrics.f1 import EPS, f1_counts, f1_metrics
+from relex_spark.sources.localdim import local_dim
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -4089,7 +4090,8 @@ def x_learn_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from relex_spark.operators.phrases import learn_phrases
 
     merges = learn_phrases(_t(spark, sf_dir, "documents"), n_merges=5)
-    return spark.createDataFrame(
+    return local_dim(
+        spark,
         [(m["rank"], m["pair"], m["n"]) for m in merges],
         "rank int, pair string, n bigint",
     )
@@ -4902,8 +4904,6 @@ def x_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reused across both references (ReusedExchange), so a checkpoint
         # here costs more than the nominal double reference (measured)
     )
-    from relex_spark.sources.localdim import local_dim
-
     ents = local_dim(
         spark,
         sorted({eid for _, eid, _ in fixture_gazetteer_rows()}),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from relex_spark.metrics.f1 import trial_summary
 from relex_spark.plans.evaluate import evaluate_candidates
+from relex_spark.sources.localdim import local_dim
 
 
 def evaluate_experiments(
@@ -38,8 +39,8 @@ def evaluate_experiments(
     for name, (candidates, weights_bc) in experiments.items():
         m = evaluate_candidates(candidates, weights_bc, dataset=dataset)
         rows.append((name, m["precision"], m["recall"], m["f1"]))
-    return spark.createDataFrame(
-        rows, "experiment string, precision double, recall double, f1 double"
+    return local_dim(
+        spark, rows, "experiment string, precision double, recall double, f1 double"
     )
 
 

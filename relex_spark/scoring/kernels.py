@@ -529,7 +529,7 @@ def lstm_encode(
     return out
 
 
-def _layer_norm(z: np.ndarray, gamma: np.ndarray, beta: np.ndarray) -> np.ndarray:
+def _layernorm(z: np.ndarray, gamma: np.ndarray, beta: np.ndarray) -> np.ndarray:
     """AllenNLP LayerNorm: gamma*(z-mean)/(std+1e-6)+beta, population std
     over the feature axis."""
     mu = z.mean(axis=-1, keepdims=True)
@@ -564,7 +564,7 @@ def attention_encode(
     for layer in layers:
         ff = np.maximum(h @ layer["ffw1"] + layer["ffb1"], 0.0)
         ff = ff @ layer["ffw2"] + layer["ffb2"]
-        ff = _layer_norm(ff + h, layer["ln_ff_g"], layer["ln_ff_b"])
+        ff = _layernorm(ff + h, layer["ln_ff_g"], layer["ln_ff_b"])
         q = ff @ layer["wq"]
         k = ff @ layer["wk"]
         v = ff @ layer["wv"]
@@ -577,7 +577,7 @@ def attention_encode(
             e = np.exp(scores)
             att = e / e.sum(axis=-1, keepdims=True)
             heads_out[:, :, sl] = att @ v[:, :, sl]
-        h = _layer_norm(
+        h = _layernorm(
             heads_out @ layer["wo"] + ff, layer["ln_out_g"], layer["ln_out_b"]
         )
         h = h * pos_mask[:, :, None]

@@ -61,7 +61,6 @@ def score_candidates(
     encoder: str = "cnn",
     with_probs: bool = False,
     with_representation: bool = False,
-    bucket_by_length: bool = True,
 ) -> DataFrame:
     """Score (tokens, head, tail) candidates → append ``label``, ``score``.
 
@@ -98,7 +97,7 @@ def score_candidates(
     # flagship values flapping ±1 u6 across sessions). Feature columns
     # identify the computation, so hashing them orders ties determin-
     # istically; a 64-bit collision merely leaves one tie unordered.
-    if bucket_by_length and not candidates.isStreaming:
+    if not candidates.isStreaming:
         in_df = in_df.sortWithinPartitions(
             F.size("tokens"),
             F.xxhash64(

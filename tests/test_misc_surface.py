@@ -119,10 +119,12 @@ def test_experiments_roundtrip(spark):
 def test_embedding_cosine_near_dup(spark):
     """Exact thresholded self-join finds the planted near-dup pair; the
     LSH-bucketed scale path returns a subset of the exact pairs with
-    identical cos_sim values (same verify expression)."""
+    identical cos_sim values (same verify expression), and every exact
+    pair's cos_sim equals cosine_topk's value for the same pair."""
     import math
 
     from relex_spark.operators.dedup import embedding_cosine_pairs
+    from relex_spark.operators.similarity import cosine_topk
 
     def vec(theta):
         return [math.cos(theta), math.sin(theta)] + [0.0] * 6
@@ -151,6 +153,15 @@ def test_embedding_cosine_near_dup(spark):
     assert set(bucketed) <= set(exact)
     for k, v in bucketed.items():
         assert v == exact[k]
+
+    # k=3 covers every other vector, so each exact pair is ranked
+    topk = {
+        (r.query_id, r.neighbor_id): r.cos_sim
+        for r in cosine_topk(emb, emb, k=3).collect()
+    }
+    for (a, b), v in exact.items():
+        assert topk[(a, b)] == v
+        assert topk[(b, a)] == v
 
 
 def test_lsh_bucketed_topk_subset_of_exact(spark):

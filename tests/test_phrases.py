@@ -54,11 +54,11 @@ def test_learn_phrases_order_and_rewrite_feedback(spark):
     ]
 
 
-def test_learn_phrases_batched_equals_sequential_on_disjoint_pairs(spark):
+def test_learn_phrases_batch_size_equals_sequential_on_disjoint_pairs(spark):
     """When the frequency top list is mutually token-disjoint, one batched
     pass must produce the IDENTICAL (rank, pair, n) sequence as the
     one-merge-per-pass loop."""
-    from relex_spark.operators.phrases import learn_phrases, learn_phrases_batched
+    from relex_spark.operators.phrases import learn_phrases
 
     rows = []
     # six disjoint hot pairs with strictly decreasing counts
@@ -72,17 +72,17 @@ def test_learn_phrases_batched_equals_sequential_on_disjoint_pairs(spark):
     seq = [(r["rank"], r["pair"], r["n"]) for r in learn_phrases(docs, n_merges=6)]
     bat = [
         (r["rank"], r["pair"], r["n"])
-        for r in learn_phrases_batched(docs, n_merges=6, batch_size=6)
+        for r in learn_phrases(docs, n_merges=6, batch_size=6)
     ]
     assert bat == seq
     assert len(bat) == 6
 
 
-def test_learn_phrases_batched_defers_interacting_pairs(spark):
+def test_learn_phrases_batch_size_defers_interacting_pairs(spark):
     """A pair sharing a token with an earlier acceptance must NOT merge in
     the same pass (its count would be stale) — it waits for the next pass
     and is recounted there."""
-    from relex_spark.operators.phrases import learn_phrases_batched
+    from relex_spark.operators.phrases import learn_phrases
 
     rows = []
     for k in range(10):
@@ -91,7 +91,7 @@ def test_learn_phrases_batched_defers_interacting_pairs(spark):
         rows.append((100 + k, f"r{k} bb cc s{k}"))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    out = learn_phrases_batched(docs, n_merges=2, batch_size=4)
+    out = learn_phrases(docs, n_merges=2, batch_size=4)
     got = [(r["rank"], r["pair"]) for r in out]
     # 'aa bb' (10) accepted; 'bb cc' (8) shares 'bb' -> deferred to pass 2,
     # where 'bb cc' still exists with its rewritten-corpus count
