@@ -1,7 +1,7 @@
 """Entity linking + canonicalization (north rule: "salted hash-join +
 connected-components-style key resolution to handle skewed hot entities").
 
-Two pieces:
+Three pieces:
 
 1. ``connected_components`` — alternating large-star/small-star iteration
    (Kiveris et al., "Connected Components in MapReduce and Beyond", SOCC'14)
@@ -9,9 +9,13 @@ Two pieces:
    O(log n) rounds. Each round is hash-partitioned by node id; the driver
    loop only checks a one-row convergence aggregate.
 
-2. ``canonicalize_triples`` — rewrites subj/obj through the component map
-   (broadcast when small, shuffle-join with optional salting when not) and
-   aggregates duplicate triples with a salted two-phase count for hot
+2. ``alias_components`` — the same labels for a gazetteer's alias graph,
+   solved on the driver from the gazetteer rows the caller already holds
+   (zero Spark jobs); every KG entry point builds its map this way.
+
+3. ``canonicalize_subj_obj`` — the one subj/obj rewrite through a component
+   map (left joins, broadcast by the callers). ``canonicalize_triples`` rewrites with it
+   and aggregates duplicate triples with a salted two-phase count for hot
    (subj, pred, obj) keys.
 
 The reference has no multi-document entity resolution (single-sentence
@@ -20,8 +24,12 @@ pipelines); this stage is the engine-side requirement from BASELINE.json.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Round bound of the distributed large-star/small-star loop. It converges in
+# O(log n) rounds in practice, so 20 only stops a pathological input.
+MAX_CC_ROUNDS = 20
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -70,7 +78,7 @@ def _edge_signature(e: DataFrame) -> tuple[int, int]:
     order-insensitive and overflow-free (ANSI mode forbids wrapping SUM).
     Equal signatures on a distinct edge set imply equality up to a 64-bit
     collision — negligible, and convergence is also bounded by
-    max_iterations."""
+    MAX_CC_ROUNDS."""
     row = e.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
@@ -118,12 +126,7 @@ def _components_local(edge_rows: list) -> list[tuple[str, str]]:
     return labels
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    checkpoint_every: int = 1,
-    local_threshold: int = 4096,
-) -> DataFrame:
+def connected_components(edges: DataFrame, local_threshold: int = 4096) -> DataFrame:
     """Minimum-label connected components over an undirected edge list.
 
     Input: DataFrame(src STRING, dst STRING). Output: DataFrame(node STRING,
@@ -188,14 +191,12 @@ def connected_components(
     )
 
     sig = _edge_signature(e)
-    for i in range(max_iterations):
-        e_next = _small_star(_large_star(e))
+    for _ in range(MAX_CC_ROUNDS):
         # Truncate lineage each round: without this the convergence check
         # re-executes the ENTIRE join chain from round 0 and the loop goes
         # quadratic. localCheckpoint is executor-memory-resident; the edge
         # frame shrinks toward O(|nodes|) as stars form.
-        if (i + 1) % checkpoint_every == 0:
-            e_next = e_next.localCheckpoint(eager=True)
+        e_next = _small_star(_large_star(e)).localCheckpoint(eager=True)
         next_sig = _edge_signature(e_next)
         e = e_next
         if next_sig == sig:
@@ -214,7 +215,8 @@ def connected_components(
 def alias_edges_from_gazetteer(gazetteer: DataFrame) -> DataFrame:
     """Alias edges: every surface links its entity_id to the entity_id of
     its lowercase form — the key-normalization graph whose components are
-    canonical entities."""
+    canonical entities. The Spark form of ``alias_components``' edges, kept
+    as its independent reference."""
     norm = gazetteer.select(
         F.col("entity_id").alias("src"),
         F.concat(F.lit("ent:"), F.regexp_replace(F.lower("surface"), " ", "_")).alias(
@@ -223,6 +225,36 @@ def alias_edges_from_gazetteer(gazetteer: DataFrame) -> DataFrame:
     )
     # self-loops are added inside connected_components; distinct edges only
     return norm.distinct()
+
+
+def alias_components(spark: SparkSession, gazetteer_rows: list[tuple]) -> DataFrame:
+    """Component map (node, component) of a gazetteer's alias graph, built
+    from its (surface, entity_id, ...) rows on the driver: the edges of
+    ``alias_edges_from_gazetteer`` solved by the union-find of
+    ``connected_components``' small-graph path, returned as a ``local_dim``.
+    The rows are driver data already, so this runs zero Spark jobs."""
+    from relex_spark.sources.localdim import local_dim
+
+    edges = {
+        (entity_id, "ent:" + surface.lower().replace(" ", "_"))
+        for surface, entity_id, *_ in gazetteer_rows
+    }
+    return local_dim(
+        spark, _components_local(sorted(edges)), "node string, component string"
+    )
+
+
+def canonicalize_subj_obj(df: DataFrame, component_map: DataFrame) -> DataFrame:
+    """Rewrite ``subj`` and ``obj`` through a (node, component) map by two
+    left joins (ids outside the map stay as they are); every other column
+    passes through. Callers wrap a dim-sized map in ``F.broadcast``."""
+    for side in ("subj", "obj"):
+        df = (
+            df.join(component_map, df[side] == component_map["node"], "left")
+            .withColumn(side, F.coalesce("component", side))
+            .drop("node", "component")
+        )
+    return df
 
 
 def canonicalize_triples(
@@ -239,26 +271,12 @@ def canonicalize_triples(
     reducers — then re-aggregated; for moderate skew, AQE's skew handling
     alone suffices (salt_buckets=0).
     """
-    cmap = component_map.select(
-        F.col("node"), F.col("component").alias("canonical")
-    )
     if broadcast_map:
-        cmap = F.broadcast(cmap)
-
-    t = (
-        triples.join(cmap, triples["subj"] == cmap["node"], "left")
-        .select(
-            triples["*"], F.coalesce("canonical", "subj").alias("subj_canon")
-        )
-    )
-    t = (
-        t.join(cmap, t["obj"] == cmap["node"], "left")
-        .select(t["*"], F.coalesce("canonical", "obj").alias("obj_canon"))
-    )
-    t = t.select(
-        F.col("subj_canon").alias("subj"),
+        component_map = F.broadcast(component_map)
+    t = canonicalize_subj_obj(triples, component_map).select(
+        "subj",
         F.col("label").alias("pred"),
-        F.col("obj_canon").alias("obj"),
+        "obj",
         "conv_id",
         "turn_idx",
         "id",

@@ -122,6 +122,24 @@ def _ts(
 # ---------------------------------------------------------------------------
 
 _DEC = "decimal(12,2)"
+# Largest integer a double holds exactly: q1/q3 sum money as BIGINT cents and
+# convert to double, which matches the DECIMAL oracle only up to here.
+_EXACT_CENTS = 2**53
+
+
+def _exact_cents_sum(cents) -> F.Column:
+    """SUM of an integer money column that raises, per group, once |sum|
+    passes 2^53 — past that the double result would silently stop
+    matching the DECIMAL sum."""
+    s = F.sum(cents)
+    return F.when(F.abs(s) <= _EXACT_CENTS, s).otherwise(
+        F.raise_error(
+            F.lit(
+                f"cents sum exceeds 2^53 ({_EXACT_CENTS}), the bound of exact "
+                "double money math in q1/q3; sum in DECIMAL(38,0) at this scale"
+            )
+        )
+    )
 
 
 @register(
@@ -148,7 +166,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (verified value-identical against the unchanged DECIMAL oracle at
     sf0.1). Halves the aggregation stage's CPU: bigint hash-agg instead of
     Decimal allocation per row (measured 1.03s → 0.55s). Exactness bound:
-    integer sums stay below 2^53 through ~sf1-scale corpora."""
+    integer sums stay below 2^53 through ~sf1-scale corpora; a group past
+    it raises (_exact_cents_sum) instead of returning an inexact double."""
     li = _t(spark, sf_dir, "lineitem")
     qty_c = F.round(F.col("l_quantity") * 100).cast("bigint")
     price_c = F.round(F.col("l_extendedprice") * 100).cast("bigint")
@@ -157,12 +176,14 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.where(F.col("l_shipdate") <= F.lit("2001-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            (F.sum(qty_c).cast("double") / F.lit(100.0)).alias("sum_qty"),
-            (F.sum(price_c).cast("double") / F.lit(100.0)).alias(
+            (_exact_cents_sum(qty_c).cast("double") / F.lit(100.0)).alias(
+                "sum_qty"
+            ),
+            (_exact_cents_sum(price_c).cast("double") / F.lit(100.0)).alias(
                 "sum_base_price"
             ),
             (
-                F.sum(price_c * (F.lit(100) - disc_c)).cast("double")
+                _exact_cents_sum(price_c * (F.lit(100) - disc_c)).cast("double")
                 / F.lit(10000.0)
             ).alias("sum_disc_price"),
             F.count(F.lit(1)).alias("count_order"),
@@ -187,7 +208,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → broadcast join (customer side
     is small after the segment filter), shuffle agg, totally-ordered top-k.
-    Money math in exact cents (same equivalence argument as q1)."""
+    Money math in exact cents (same equivalence argument and 2^53 guard
+    as q1)."""
     orders = _t(spark, sf_dir, "orders")
     lineitem = _t(spark, sf_dir, "lineitem")
     customer = _t(spark, sf_dir, "customer").where(
@@ -205,7 +227,7 @@ def q3_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey")
         .agg(
             (
-                F.sum(price_c * (F.lit(100) - disc_c)).cast("double")
+                _exact_cents_sum(price_c * (F.lit(100) - disc_c)).cast("double")
                 / F.lit(10000.0)
             ).alias("revenue")
         )
@@ -3440,22 +3462,24 @@ def kg_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("kg_canonical_pairs", _kg_canonical_oracle())
 def kg_canonical_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity canonicalization at corpus scale, label-free: candidate
-    pairs → subj/obj rewritten through the REAL connected-components map
-    (alternating large-star/small-star over the gazetteer alias graph,
-    broadcast join) → (subj, obj) co-occurrence rollup. The oracle's
-    component map is an independent plain-Python union-find, so the CC
-    implementation itself is driver-cross-checked."""
+    pairs → subj/obj rewritten through the pipeline's alias component map
+    (``alias_components``: driver-side union-find over the gazetteer alias
+    graph, broadcast join) → (subj, obj) co-occurrence rollup. The oracle's
+    component map is an independent plain-Python union-find, so the map
+    and the rewrite are driver-cross-checked. The 40-edge gazetteer graph
+    never reaches the distributed large-star/small-star path; that path
+    is checked against the driver-side one in tests/test_pipeline.py
+    (``local_threshold=0``)."""
     from relex_spark.operators.candidates import (
         detect_mentions,
         generate_candidate_pairs,
     )
     from relex_spark.operators.canonicalize import (
-        alias_edges_from_gazetteer,
-        connected_components,
+        alias_components,
+        canonicalize_subj_obj,
     )
     from relex_spark.sources.transcripts import (
         fixture_gazetteer_rows,
-        gazetteer_df,
         transcripts_from_documents,
     )
 
@@ -3463,23 +3487,8 @@ def kg_canonical_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_documents(docs)
     m = detect_mentions(t, fixture_gazetteer_rows(), keep_text=False)
     pairs = generate_candidate_pairs(m, 10).select("id", "subj", "obj")
-
-    cmap = F.broadcast(
-        connected_components(alias_edges_from_gazetteer(gazetteer_df(spark)))
-    )
-    r = (
-        pairs.join(cmap, pairs["subj"] == cmap["node"], "left")
-        .select(
-            "id",
-            F.coalesce("component", "subj").alias("subj_c"),
-            "obj",
-        )
-        .join(cmap, F.col("obj") == cmap["node"], "left")
-        .select(
-            "id",
-            F.col("subj_c").alias("subj"),
-            F.coalesce("component", "obj").alias("obj"),
-        )
+    r = canonicalize_subj_obj(
+        pairs, F.broadcast(alias_components(spark, fixture_gazetteer_rows()))
     )
     return r.groupBy("subj", "obj").agg(
         F.count(F.lit(1)).cast("bigint").alias("support"),
@@ -3532,12 +3541,11 @@ def kg_pair_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         generate_candidate_pairs,
     )
     from relex_spark.operators.canonicalize import (
-        alias_edges_from_gazetteer,
-        connected_components,
+        alias_components,
+        canonicalize_subj_obj,
     )
     from relex_spark.sources.transcripts import (
         fixture_gazetteer_rows,
-        gazetteer_df,
         transcripts_from_documents,
     )
 
@@ -3547,24 +3555,8 @@ def kg_pair_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = generate_candidate_pairs(m, 10).select(
         "conv_id", "turn_idx", "subj", "obj"
     )
-    cmap = F.broadcast(
-        connected_components(alias_edges_from_gazetteer(gazetteer_df(spark)))
-    )
-    r = (
-        pairs.join(cmap, pairs["subj"] == cmap["node"], "left")
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.coalesce("component", "subj").alias("subj_c"),
-            "obj",
-        )
-        .join(cmap, F.col("obj") == cmap["node"], "left")
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.col("subj_c").alias("subj"),
-            F.coalesce("component", "obj").alias("obj"),
-        )
+    r = canonicalize_subj_obj(
+        pairs, F.broadcast(alias_components(spark, fixture_gazetteer_rows()))
     )
     return r.groupBy("subj", "obj").agg(
         F.min("turn_idx").cast("int").alias("first_turn"),

@@ -4,7 +4,7 @@
                 ──► candidate pair generation (per-turn, zero-shuffle)
                 ──► preprocess (truncate/clamp — P5/P7, codegen)
                 ──► relation scoring (mapInPandas CNN kernel, M1..M18)
-                ──► entity canonicalization (connected components)
+                ──► entity canonicalization (alias-graph components)
                 ──► graph materialize: (subj, pred, obj) triples
                     + per-partition lineage/counters, stage checkpoints
 
@@ -18,9 +18,10 @@ Shuffle census for the whole plan (the 100 TB argument):
     spans) input (dedup-before-inference; transcript corpora repeat
     boilerplate heavily). With score_distinct=False (and always on the
     streaming path) scoring is in-place and the chain stays zero-shuffle.
-  * canonicalize: the component map is tiny (gazetteer-derived) and
-    broadcast; triple dedup groupBy(subj,pred,obj) is the plan's ONE wide
-    stage, AQE-coalesced and optionally salted for hot triples.
+  * canonicalize: the component map is tiny (solved on the driver from
+    the gazetteer rows) and broadcast; triple dedup groupBy(subj,pred,obj)
+    is the plan's ONE wide stage, AQE-coalesced and optionally salted for
+    hot triples.
   * checkpoints: each stage optionally writes parquet+manifest (resume
     boundary); off by default in benchmarks.
 
@@ -42,20 +43,11 @@ from relex_spark.operators.candidates import (
     detect_mentions,
     generate_candidate_pairs,
 )
-from relex_spark.operators.canonicalize import (
-    alias_edges_from_gazetteer,
-    canonicalize_triples,
-    connected_components,
-)
+from relex_spark.operators.canonicalize import alias_components, canonicalize_triples
 from relex_spark.scoring.scorer import broadcast_weights, score_candidates
 from relex_spark.scoring.weights import ModelWeights, build_fixture_weights
-from relex_spark.sources.localdim import local_dim
 from relex_spark.sources.sinks import read_stage, stage_is_complete, write_stage
-from relex_spark.sources.transcripts import (
-    fixture_gazetteer_rows,
-    gazetteer_df,
-    load_semeval_fixture,
-)
+from relex_spark.sources.transcripts import fixture_gazetteer_rows, load_semeval_fixture
 
 
 @dataclass
@@ -275,16 +267,17 @@ def run_kg_pipeline(
         write_stage(df, path, name)
         return read_stage(spark, path, drop_lineage=True)
 
-    scored = _stage("scored_triples", lambda: build_triples(transcripts, config))
+    def canonical() -> DataFrame:
+        # Built only when canonical_triples is not committed: a resume reads
+        # that stage alone and neither rescores nor rebuilds the map.
+        scored = _stage("scored_triples", lambda: build_triples(transcripts, config))
+        return canonicalize_triples(
+            scored,
+            alias_components(spark, config.gazetteer_rows),
+            salt_buckets=config.salt_buckets,
+        )
 
-    gaz = gazetteer_df(spark)
-    # 40-row local_dim; components over the alias graph are tiny.
-    components = connected_components(alias_edges_from_gazetteer(gaz))
-
-    canonical = canonicalize_triples(
-        scored, components, broadcast_map=True, salt_buckets=config.salt_buckets
-    )
-    return _stage("canonical_triples", lambda: canonical)
+    return _stage("canonical_triples", canonical)
 
 
 def tacred_pipeline_weights(masking_mode: str = "NER") -> ModelWeights:
@@ -466,13 +459,7 @@ def run_tacred_kg_pipeline(
         spark, transcripts, max_len=max_len, masking_mode=masking_mode,
         prune=prune, weights=weights, score_distinct=score_distinct,
     )
-    gaz = local_dim(
-        spark,
-        tacred_gazetteer_rows(),
-        "surface string, entity_id string, entity_type string",
-    )
-    components = connected_components(alias_edges_from_gazetteer(gaz))
-    return canonicalize_triples(scored, components, broadcast_map=True)
+    return canonicalize_triples(scored, alias_components(spark, tacred_gazetteer_rows()))
 
 
 def verify_text_invariant(transcripts: DataFrame) -> int:

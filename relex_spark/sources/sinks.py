@@ -2,12 +2,12 @@
 rule: "checkpoint after each stage so any partition can resume without
 recomputation", per-partition lineage + counters).
 
-Iceberg note: this sandbox has no Iceberg catalog jars, so stages commit as
-parquet directories with an atomic JSON manifest — the same contract an
-Iceberg snapshot commit provides (all-or-nothing visibility + metadata). On
-a cluster with a catalog, ``write_stage`` switches to
-``df.writeTo(table).createOrReplace()`` and the manifest content moves into
-snapshot summary properties; callers are unaffected.
+Iceberg note: ``write_stage`` always commits a parquet directory with an
+atomic JSON manifest — the same contract an Iceberg snapshot commit
+provides (all-or-nothing visibility + metadata). The Iceberg twin,
+``write_stage_iceberg`` / ``stage_is_complete_iceberg``, is a separate
+function that a caller with a configured catalog calls explicitly; nothing
+switches to it automatically.
 
 Lineage: every stage output carries provenance columns added by
 ``with_lineage`` — the partition id the row was produced by and the stage
@@ -38,42 +38,26 @@ def with_lineage(df: DataFrame, stage: str) -> DataFrame:
     )
 
 
-def write_stage(
-    df: DataFrame,
-    path: str,
-    stage: str,
-    partition_by: list[str] | None = None,
-    lineage: bool = True,
-) -> dict:
-    """Write a stage output with an atomic commit manifest.
+def write_stage(df: DataFrame, path: str, stage: str) -> dict:
+    """Write a stage output, with lineage columns, under an atomic commit
+    manifest.
 
     The parquet write itself is atomic-by-rename (Spark committer); the
     manifest is written only after success, so ``stage_is_complete`` is a
     reliable resume marker. Returns the manifest dict (counters included).
     """
-    out = with_lineage(df, stage) if lineage else df
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    with_lineage(df, stage).write.mode("overwrite").parquet(path)
 
-    spark = df.sparkSession
-    committed = spark.read.parquet(path)
-    if lineage:
-        per_part = {
-            str(r["_partition_id"]): r["cnt"]
-            for r in committed.groupBy("_partition_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        rows = sum(per_part.values())
-    else:
-        per_part = {}
-        rows = committed.count()
-
+    committed = df.sparkSession.read.parquet(path)
+    per_part = {
+        str(r["_partition_id"]): r["cnt"]
+        for r in committed.groupBy("_partition_id")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    }
     manifest = {
         "stage": stage,
-        "rows": rows,
+        "rows": sum(per_part.values()),
         "partition_counts": per_part,
         "committed_at_unix": int(time.time()),
         "schema": committed.schema.simpleString(),
@@ -112,26 +96,20 @@ def write_id_label_tsv(df: DataFrame, path: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Iceberg commit branch (feature-flagged: this sandbox ships no Iceberg
-# catalog jars, so the parquet+manifest protocol above is the default).
+# Iceberg commit branch, called explicitly (no flag routes write_stage here;
+# the parquet+manifest protocol above is what the pipelines use).
 #
 # Cluster setup (spark-defaults or --conf):
 #   spark.sql.catalog.<cat>                 org.apache.iceberg.spark.SparkCatalog
 #   spark.sql.catalog.<cat>.type            hadoop           (or hive/rest)
 #   spark.sql.catalog.<cat>.warehouse       s3://bucket/warehouse
 #   spark.jars.packages  org.apache.iceberg:iceberg-spark-runtime-3.5_2.13:<ver>
-# then export RELEX_ICEBERG_CATALOG=<cat> and pass fully-qualified table
-# names (<cat>.<db>.<table>) to write_stage_iceberg. The stage manifest's
-# role is played by the Iceberg snapshot (atomic all-or-nothing commit);
-# the stage marker moves into a table property so resume checks stay
-# one lookup.
+# then pass fully-qualified table names (<cat>.<db>.<table>) to
+# write_stage_iceberg. The stage manifest's role is played by the Iceberg
+# snapshot (atomic all-or-nothing commit); the stage marker moves into a
+# table property so resume checks stay one lookup. The real-catalog test
+# runs when RELEX_ICEBERG_CATALOG names such a catalog.
 # ---------------------------------------------------------------------------
-
-ICEBERG_CATALOG_ENV = "RELEX_ICEBERG_CATALOG"
-
-
-def iceberg_enabled() -> bool:
-    return bool(os.environ.get(ICEBERG_CATALOG_ENV))
 
 
 def write_stage_iceberg(

@@ -217,7 +217,10 @@ def fixture_gazetteer_rows() -> list[tuple[str, str, str]]:
 def gazetteer_df(spark: SparkSession) -> DataFrame:
     # JVM LocalRelation, not createDataFrame: a Python-parallelized 40-row
     # dim costs defaultParallelism Python-worker tasks at EVERY
-    # materialization (broadcast builds, CC probes) — see sources/localdim.py
+    # materialization (broadcast builds, joins) — see sources/localdim.py.
+    # The pipelines' alias map is built from fixture_gazetteer_rows()
+    # directly (canonicalize.alias_components); this frame serves the
+    # broadcast-join mention detector and the Spark reference composition.
     from relex_spark.sources.localdim import local_dim
 
     return local_dim(

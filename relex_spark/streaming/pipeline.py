@@ -354,15 +354,10 @@ def run_streaming_canonical_graph(
     """
     import os
 
-    from relex_spark.operators.canonicalize import (
-        alias_edges_from_gazetteer,
-        canonicalize_triples,
-        connected_components,
-    )
+    from relex_spark.operators.canonicalize import alias_components, canonicalize_triples
     from relex_spark.operators.incremental import merge_rollups
     from relex_spark.plans.kg_pipeline import KGPipelineConfig, build_triples
     from relex_spark.sources.sinks import read_stage, stage_is_complete, write_stage
-    from relex_spark.sources.transcripts import gazetteer_df
 
     config = config or KGPipelineConfig()
 
@@ -384,12 +379,9 @@ def run_streaming_canonical_graph(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        components = connected_components(
-            alias_edges_from_gazetteer(gazetteer_df(spark))
-        )
         update = canonicalize_triples(
             build_triples(batch_df, config),
-            components,
+            alias_components(spark, config.gazetteer_rows),
             salt_buckets=config.salt_buckets,
         )
         prev = latest_version_below(batch_id)

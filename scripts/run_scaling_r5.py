@@ -82,18 +82,13 @@ def ensure_corpus(path: str, n_convs: int) -> None:
 
 
 def worker(cpus: int, variant: str) -> None:
-    from relex_spark.operators.canonicalize import (
-        alias_edges_from_gazetteer,
-        canonicalize_triples,
-        connected_components,
-    )
+    from relex_spark.operators.canonicalize import alias_components, canonicalize_triples
     from relex_spark.plans.kg_pipeline import (
         KGPipelineConfig,
         build_triples,
         reference_capacity_weights,
     )
     from relex_spark.session import get_spark
-    from relex_spark.sources.transcripts import gazetteer_df
 
     corpus = CORPUS[variant]
     spark = get_spark(
@@ -115,9 +110,7 @@ def worker(cpus: int, variant: str) -> None:
     else:
         config_dedup.weights = config.resolved_weights()
 
-    components = connected_components(
-        alias_edges_from_gazetteer(gazetteer_df(spark))
-    ).localCheckpoint(eager=True)
+    components = alias_components(spark, config.gazetteer_rows)
 
     def job(cfg):
         canonicalize_triples(build_triples(tdf, cfg), components).write.format(

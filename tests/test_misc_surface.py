@@ -1,6 +1,6 @@
 """S6 TSV sink, S7/S8 experiment result sinks+scans, E6 multi-experiment
-eval, mention-detection strategy parity (map-literal vs broadcast-join),
-and the stage registry."""
+eval, and mention-detection strategy parity (map-literal vs
+broadcast-join)."""
 
 import glob
 import os
@@ -9,7 +9,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from relex_spark.functions.registry import lookup, names
 from relex_spark.operators.candidates import (
     detect_mentions,
     detect_mentions_join,
@@ -30,16 +29,6 @@ from relex_spark.sources.transcripts import (
     gazetteer_df,
     synthesize_transcripts,
 )
-
-
-def test_registry_names():
-    assert "cnn" in names("encoder")
-    assert lookup("dataset_reader", "semeval2010_task8") is not None
-    try:
-        lookup("encoder", "nope")
-        raise AssertionError("expected KeyError")
-    except KeyError as e:
-        assert "available" in str(e)
 
 
 def test_mention_detection_strategies_agree(spark):

@@ -1,7 +1,9 @@
 """Pipeline-level invariants: checkpoint/resume equivalence, salted vs
-unsalted canonicalization parity, connected-components correctness, E5
-evaluation self-consistency."""
+unsalted canonicalization parity, connected-components and alias-map
+correctness, E5 evaluation self-consistency."""
 
+import datetime as dt
+import os
 import shutil
 import tempfile
 
@@ -9,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from relex_spark.operators.canonicalize import (
+    alias_components,
+    alias_edges_from_gazetteer,
     canonicalize_triples,
     connected_components,
 )
@@ -20,8 +24,34 @@ from relex_spark.plans.kg_pipeline import (
     verify_text_invariant,
 )
 from relex_spark.scoring.scorer import broadcast_weights
+from relex_spark.sources.localdim import local_dim
 from relex_spark.sources.readers import read_semeval_jsonl, semeval_to_candidates
-from relex_spark.sources.transcripts import synthesize_transcripts
+from relex_spark.sources.transcripts import (
+    fixture_gazetteer_rows,
+    synthesize_transcripts,
+    tacred_gazetteer_rows,
+)
+
+GAZETTEER_SCHEMA = "surface string, entity_id string, entity_type string"
+# Two entity ids whose surfaces differ only in case, plus a third entity:
+# the alias graph joins ent:acme_corp to ent:acme, which the fixture
+# gazetteer knows nothing of.
+ACME_ROWS = [
+    ("Acme", "ent:acme_corp", "ORG"),
+    ("acme", "ent:acme", "ORG"),
+    ("Globex", "ent:globex", "ORG"),
+]
+TRANSCRIPT_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
+
+
+def _spark_alias_components(spark, rows):
+    """The Spark composition alias_components replaces, kept as reference."""
+    return connected_components(
+        alias_edges_from_gazetteer(local_dim(spark, rows, GAZETTEER_SCHEMA))
+    )
 
 
 def test_connected_components_minimum_label(spark):
@@ -66,8 +96,63 @@ def test_checkpoint_resume_equivalence(spark):
             for r in run_kg_pipeline(spark, t, cfg).collect()
         }
         assert first == second and first
+        # a committed canonical stage is the whole resume: with the scored
+        # stage gone, nothing is rescored and that directory stays gone
+        scored_dir = os.path.join(ck, "scored_triples")
+        shutil.rmtree(scored_dir)
+        third = {
+            (r["subj"], r["pred"], r["obj"], r["support"])
+            for r in run_kg_pipeline(spark, t, cfg).collect()
+        }
+        assert third == first
+        assert not os.path.exists(scored_dir)
     finally:
         shutil.rmtree(ck, ignore_errors=True)
+
+
+def test_pipeline_canonicalizes_through_config_gazetteer(spark):
+    """run_kg_pipeline resolves aliases through config.gazetteer_rows' own
+    alias graph, exactly as the Spark reference composition over those
+    rows does — not through the fixture gazetteer."""
+    ts = dt.datetime(2024, 1, 1)
+    t = spark.createDataFrame(
+        [
+            ("c1", 0, "user", "Acme met Globex", None, ts),
+            ("c1", 1, "user", "acme met Globex", None, ts),
+        ],
+        TRANSCRIPT_SCHEMA,
+    )
+    cfg = KGPipelineConfig(gazetteer_rows=ACME_ROWS)
+    cols = ["subj", "pred", "obj", "support", "max_score", "first_id"]
+    got = sorted(tuple(r) for r in run_kg_pipeline(spark, t, cfg).select(cols).collect())
+    want = canonicalize_triples(
+        build_triples(t, cfg), _spark_alias_components(spark, ACME_ROWS)
+    )
+    assert got == sorted(tuple(r) for r in want.select(cols).collect())
+    assert {r[0] for r in got} == {"ent:acme"}
+    assert {r[2] for r in got} == {"ent:globex"}
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [fixture_gazetteer_rows(), tacred_gazetteer_rows(), ACME_ROWS],
+    ids=["fixture", "tacred", "acme"],
+)
+def test_alias_components_matches_spark_composition(spark, rows):
+    """alias_components gives the Spark composition's (node, component)
+    rows, and building it runs no Spark job."""
+    sc = spark.sparkContext
+    group = "test.alias_components"
+    sc.setJobGroup(group, group)
+    try:
+        driver_side = alias_components(spark, rows)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert driver_side.schema.simpleString() == "struct<node:string,component:string>"
+    assert sorted(tuple(r) for r in driver_side.collect()) == sorted(
+        tuple(r) for r in _spark_alias_components(spark, rows).collect()
+    )
 
 
 def test_salted_canonicalization_parity(spark):
@@ -133,10 +218,6 @@ def test_null_and_whitespace_text_rows_are_harmless(spark):
     """Dirty real-world rows (null / empty / whitespace-only text) must not
     crash the pipeline or create spurious candidates — and the text-equality
     invariant counter flags only the non-round-trippable row."""
-    import datetime as dt
-
-    from relex_spark.plans.kg_pipeline import verify_text_invariant
-
     ts = dt.datetime(2024, 1, 1)
     rows = [
         ("c1", 0, "user", None, None, ts),
@@ -144,11 +225,7 @@ def test_null_and_whitespace_text_rows_are_harmless(spark):
         ("c1", 2, "user", "   ", None, ts),
         ("c1", 3, "user", "the Student joined the Association", None, ts),
     ]
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    df = spark.createDataFrame(rows, schema)
+    df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
 
     out = build_triples(df, KGPipelineConfig()).collect()
     assert [r["id"] for r in out] == ["c1:3:1"]

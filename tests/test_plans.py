@@ -225,3 +225,31 @@ def test_q1_pushes_filter_and_prunes_scan(spark):
     assert "l_shipdate" in pushed and "LessThanOrEqual" in pushed
     read = scan[scan.index("ReadSchema") :].splitlines()[0]
     assert "l_comment" not in read and "l_orderkey" not in read
+
+
+def test_cents_sum_past_2_53_fails_loudly(spark, tmp_path):
+    """q1/q3 sum money as BIGINT cents and convert to double, which is
+    exact only up to 2^53. Two lineitems at 9.0e13 put one group's cent
+    sum past that bound (each alone is below it): both queries must raise
+    naming the bound, not return an inexact double."""
+    import datetime as dt
+
+    from relex_spark.plans import driver_queries as dq
+
+    ship = dt.datetime(1998, 1, 1)
+    spark.createDataFrame(
+        [(1, 1.0, 9.0e13, 0.0, "A", "F", ship), (1, 1.0, 9.0e13, 0.0, "A", "F", ship)],
+        "l_orderkey bigint, l_quantity double, l_extendedprice double, "
+        "l_discount double, l_returnflag string, l_linestatus string, "
+        "l_shipdate timestamp",
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    spark.createDataFrame([(1, 1)], "o_orderkey bigint, o_custkey bigint").write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    spark.createDataFrame(
+        [(1, "BUILDING")], "c_custkey bigint, c_mktsegment string"
+    ).write.parquet(str(tmp_path / "customer.parquet"))
+    for name in ("q1_pricing_summary", "q3_order_revenue"):
+        with pytest.raises(Exception, match=r"exceeds 2\^53") as err:
+            dq.QUERIES[name](spark, str(tmp_path)).collect()
+        assert "USER_RAISED_EXCEPTION" in str(err.value)
