@@ -4916,7 +4916,7 @@ def x_streaming_canonical_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from relex_spark.sources.sinks import read_stage, stage_is_complete
+    from relex_spark.sources.sinks import committed_versions, read_stage
     from relex_spark.sources.transcripts import transcripts_from_documents
     from relex_spark.streaming.pipeline import (
         run_streaming_canonical_graph,
@@ -4940,13 +4940,7 @@ def x_streaming_canonical_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base, "ckpt"),
         )
         q.awaitTermination()
-        versions = sorted(
-            int(n[1:])
-            for n in os.listdir(graph_dir)
-            if n.startswith("v")
-            and n[1:].isdigit()
-            and stage_is_complete(os.path.join(graph_dir, n), "canonical_graph")
-        )
+        versions = committed_versions(graph_dir, "canonical_graph")
         if not versions:
             raise RuntimeError(
                 f"streaming canonical-graph job committed no complete "

@@ -22,8 +22,9 @@ Shuffle census for the whole plan (the 100 TB argument):
     the gazetteer rows) and broadcast; triple dedup groupBy(subj,pred,obj)
     is the plan's ONE wide stage, AQE-coalesced and optionally salted for
     hot triples.
-  * checkpoints: each stage optionally writes parquet+manifest (resume
-    boundary); off by default in benchmarks.
+  * checkpoints: with checkpoint_dir set, each stage writes parquet + a
+    manifest (resume boundary; kgbench's kg_refcap writes and resumes them
+    on every pass).
 
 Per-turn text-equality invariant: mention/pair/score stages carry
 (conv_id, turn_idx) through; `verify_text_invariant` joins output back to
@@ -261,10 +262,8 @@ def run_kg_pipeline(
         if not ckpt:
             return make()
         path = os.path.join(ckpt, name)
-        if stage_is_complete(path, name):
-            return read_stage(spark, path, drop_lineage=True)
-        df = make()
-        write_stage(df, path, name)
+        if not stage_is_complete(path, name):
+            write_stage(make(), path, name)
         return read_stage(spark, path, drop_lineage=True)
 
     def canonical() -> DataFrame:

@@ -11,18 +11,22 @@ switches to it automatically.
 
 Lineage: every stage output carries provenance columns added by
 ``with_lineage`` — the partition id the row was produced by and the stage
-name — and the manifest records per-partition row counts, so a resume can
-verify which partitions are complete.
+name — and the manifest records per-partition row counts, read from the
+parquet footers of the committed files.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
+from collections import Counter
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_relex_stage_manifest.json"
 
@@ -46,21 +50,22 @@ def write_stage(df: DataFrame, path: str, stage: str) -> dict:
     manifest is written only after success, so ``stage_is_complete`` is a
     reliable resume marker. Returns the manifest dict (counters included).
     """
-    with_lineage(df, stage).write.mode("overwrite").parquet(path)
+    out = with_lineage(df, stage)
+    out.write.mode("overwrite").parquet(path)
 
-    committed = df.sparkSession.read.parquet(path)
-    per_part = {
-        str(r["_partition_id"]): r["cnt"]
-        for r in committed.groupBy("_partition_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    # Count from the committed files' footers, not a re-read: part-NNNNN is
+    # the writing task's partition id (the value with_lineage records),
+    # maxRecordsPerFile splits one id over several files, and an empty
+    # frame still writes one empty file (dropped by the unary +).
+    per_part: Counter[str] = Counter()
+    for name in sorted(glob.glob("part-*", root_dir=path)):
+        per_part[str(int(name.split("-")[1]))] += pq.read_metadata(os.path.join(path, name)).num_rows
     manifest = {
         "stage": stage,
-        "rows": sum(per_part.values()),
-        "partition_counts": per_part,
+        "rows": per_part.total(),
+        "partition_counts": dict(+per_part),
         "committed_at_unix": int(time.time()),
-        "schema": committed.schema.simpleString(),
+        "schema": out.schema.jsonValue(),
     }
     tmp = os.path.join(path, MANIFEST + ".tmp")
     with open(tmp, "w") as f:
@@ -71,19 +76,31 @@ def write_stage(df: DataFrame, path: str, stage: str) -> dict:
 
 def stage_is_complete(path: str, stage: str) -> bool:
     """Resume check: a stage directory counts as complete only with a
-    matching committed manifest."""
-    mpath = os.path.join(path, MANIFEST)
-    if not os.path.exists(mpath):
-        return False
+    matching committed manifest that records its schema as JSON."""
     try:
-        with open(mpath) as f:
-            return json.load(f).get("stage") == stage
+        with open(os.path.join(path, MANIFEST)) as f:
+            m = json.load(f)
     except (json.JSONDecodeError, OSError):
         return False
+    return m.get("stage") == stage and isinstance(m.get("schema"), dict)
+
+
+def committed_versions(root: str, stage: str) -> list[int]:
+    """Sorted N of every ``root/v<N>`` directory holding a complete ``stage``."""
+    names = os.listdir(root) if os.path.isdir(root) else []
+    return sorted(
+        int(n[1:])
+        for n in names
+        if n[:1] == "v" and n[1:].isdecimal() and stage_is_complete(os.path.join(root, n), stage)
+    )
 
 
 def read_stage(spark: SparkSession, path: str, drop_lineage: bool = False) -> DataFrame:
-    df = spark.read.parquet(path)
+    """Read a committed stage with its manifest's schema (building the frame
+    runs no job). Raises FileNotFoundError without a committed manifest."""
+    with open(os.path.join(path, MANIFEST)) as f:
+        schema = StructType.fromJson(json.load(f)["schema"])
+    df = spark.read.schema(schema).parquet(path)
     if drop_lineage:
         df = df.drop("_stage", "_partition_id")
     return df

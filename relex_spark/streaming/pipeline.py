@@ -357,25 +357,9 @@ def run_streaming_canonical_graph(
     from relex_spark.operators.canonicalize import alias_components, canonicalize_triples
     from relex_spark.operators.incremental import merge_rollups
     from relex_spark.plans.kg_pipeline import KGPipelineConfig, build_triples
-    from relex_spark.sources.sinks import read_stage, stage_is_complete, write_stage
+    from relex_spark.sources.sinks import committed_versions, read_stage, write_stage
 
     config = config or KGPipelineConfig()
-
-    def latest_version_below(limit: int) -> int | None:
-        """Largest complete version STRICTLY below ``limit`` — a replayed
-        batch must merge against its predecessor, not against its own
-        (possibly committed) output, or replay would drop history."""
-        if not os.path.isdir(graph_dir):
-            return None
-        best = None
-        for name in os.listdir(graph_dir):
-            if name.startswith("v") and name[1:].isdigit():
-                v = int(name[1:])
-                if v < limit and stage_is_complete(
-                    os.path.join(graph_dir, name), "canonical_graph"
-                ) and (best is None or v > best):
-                    best = v
-        return best
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -384,7 +368,12 @@ def run_streaming_canonical_graph(
             alias_components(spark, config.gazetteer_rows),
             salt_buckets=config.salt_buckets,
         )
-        prev = latest_version_below(batch_id)
+        # A replayed batch merges against its predecessor, not against its
+        # own (possibly committed) output, or replay would drop history.
+        prev = max(
+            (v for v in committed_versions(graph_dir, "canonical_graph") if v < batch_id),
+            default=None,
+        )
         if prev is not None:
             accumulated = read_stage(
                 spark, os.path.join(graph_dir, f"v{prev}"), drop_lineage=True

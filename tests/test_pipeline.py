@@ -3,12 +3,14 @@ unsalted canonicalization parity, connected-components and alias-map
 correctness, E5 evaluation self-consistency."""
 
 import datetime as dt
+import json
 import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from relex_spark.operators.canonicalize import (
     alias_components,
@@ -26,6 +28,7 @@ from relex_spark.plans.kg_pipeline import (
 from relex_spark.scoring.scorer import broadcast_weights
 from relex_spark.sources.localdim import local_dim
 from relex_spark.sources.readers import read_semeval_jsonl, semeval_to_candidates
+from relex_spark.sources.sinks import MANIFEST, read_stage, stage_is_complete, write_stage
 from relex_spark.sources.transcripts import (
     fixture_gazetteer_rows,
     synthesize_transcripts,
@@ -82,32 +85,104 @@ def test_connected_components_paths_share_string_schema(spark):
 
 def test_checkpoint_resume_equivalence(spark):
     t = synthesize_transcripts(spark, n_convs=15)
+    sc = spark.sparkContext
     ck = tempfile.mkdtemp(prefix="relex_ck_")
+    cfg = KGPipelineConfig(checkpoint_dir=ck)
+
+    def run(group: str) -> set:
+        sc.setJobGroup(group, group)
+        try:
+            return {
+                (r["subj"], r["pred"], r["obj"], r["support"])
+                for r in run_kg_pipeline(spark, t, cfg).collect()
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
     try:
-        cfg = KGPipelineConfig(checkpoint_dir=ck)
-        first = {
-            (r["subj"], r["pred"], r["obj"], r["support"])
-            for r in run_kg_pipeline(spark, t, cfg).collect()
-        }
+        first = run("test.checkpoint.first")
         # resume: scored stage must be read from the manifest-committed
         # checkpoint, producing identical canonical triples
-        second = {
-            (r["subj"], r["pred"], r["obj"], r["support"])
-            for r in run_kg_pipeline(spark, t, cfg).collect()
-        }
+        second = run("test.checkpoint.resume")
         assert first == second and first
+        # job budget: a stage commit counts rows from the parquet footers and
+        # a read takes its schema from the manifest, so neither re-scans
+        jobs = sc.statusTracker().getJobIdsForGroup
+        assert len(jobs("test.checkpoint.first")) <= 8
+        assert len(jobs("test.checkpoint.resume")) <= 1
         # a committed canonical stage is the whole resume: with the scored
         # stage gone, nothing is rescored and that directory stays gone
         scored_dir = os.path.join(ck, "scored_triples")
         shutil.rmtree(scored_dir)
-        third = {
-            (r["subj"], r["pred"], r["obj"], r["support"])
-            for r in run_kg_pipeline(spark, t, cfg).collect()
-        }
-        assert third == first
+        assert run("test.checkpoint.third") == first
+        assert len(jobs("test.checkpoint.third")) <= 1
         assert not os.path.exists(scored_dir)
     finally:
         shutil.rmtree(ck, ignore_errors=True)
+
+
+def _sink_frame(spark, case: str):
+    # `id` is non-nullable; `first id` is a name a simpleString schema
+    # cannot carry back
+    df = spark.range(1000 if case == "max_records" else 200).select(
+        "id",
+        F.when(F.col("id") % 3 == 0, None).otherwise(F.col("id").cast("string")).alias("first id"),
+    )
+    if case == "skewed":
+        return df.repartition(4, F.when(F.col("id") < 190, 0).otherwise(F.col("id")))
+    if case == "empty":
+        return df.where(F.lit(False))
+    return df.repartition(3 if case == "max_records" else 5)
+
+
+@pytest.mark.parametrize("case", ["five_partitions", "skewed", "empty", "max_records"])
+def test_stage_manifest_matches_committed_files(spark, case):
+    """write_stage's footer counts equal a groupBy over the committed files,
+    read_stage builds with zero jobs and the inferred schema, and a manifest
+    with a string schema is not a complete stage."""
+    sc = spark.sparkContext
+    path = os.path.join(tempfile.mkdtemp(prefix="relex_sink_"), "stage")
+    conf = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(conf)
+    try:
+        if case == "max_records":
+            spark.conf.set(conf, "37")
+        df = _sink_frame(spark, case)
+        manifest = write_stage(df, path, "s")
+        want = {
+            str(r["_partition_id"]): r["count"]
+            for r in spark.read.parquet(path).groupBy("_partition_id").count().collect()
+        }
+        assert manifest["partition_counts"] == want
+        assert manifest["rows"] == sum(want.values()) == df.count()
+        if case == "max_records":
+            assert len([n for n in os.listdir(path) if n.startswith("part-")]) > len(want)
+
+        group = f"test.read_stage.{case}"
+        sc.setJobGroup(group, group)
+        try:
+            got = read_stage(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert got.schema == spark.read.parquet(path).schema
+        written = StructType.fromJson(manifest["schema"])
+        assert (written["id"].nullable, written["first id"].nullable) == (False, True)
+        assert sorted(tuple(r) for r in got.drop("_stage", "_partition_id").collect()) == sorted(
+            tuple(r) for r in df.collect()
+        )
+
+        assert stage_is_complete(path, "s")
+        mpath = os.path.join(path, MANIFEST)
+        with open(mpath) as f:
+            m = json.load(f)
+        m["schema"] = got.schema.simpleString()
+        with open(mpath, "w") as f:
+            json.dump(m, f)
+        assert not stage_is_complete(path, "s")
+    finally:
+        spark.conf.set(conf, old)
+        shutil.rmtree(os.path.dirname(path), ignore_errors=True)
 
 
 def test_pipeline_canonicalizes_through_config_gazetteer(spark):

@@ -307,13 +307,12 @@ def test_streaming_canonical_graph_merge_equivalence(spark):
     """The incrementally-maintained canonical graph (per-batch triples
     merged with monoid algebra) must equal the single-pass batch pipeline
     over all ingested turns — across multiple micro-batches."""
-    import os
-
     from relex_spark.operators.canonicalize import (
         alias_edges_from_gazetteer,
         canonicalize_triples,
         connected_components,
     )
+    from relex_spark.sources.sinks import committed_versions
     from relex_spark.sources.transcripts import gazetteer_df
     from relex_spark.streaming.pipeline import run_streaming_canonical_graph
 
@@ -333,9 +332,7 @@ def test_streaming_canonical_graph_merge_equivalence(spark):
         q = run_streaming_canonical_graph(stream, g_dir, ck_dir, KGPipelineConfig())
         q.awaitTermination(300)
 
-        versions = sorted(
-            int(n[1:]) for n in os.listdir(g_dir) if n.startswith("v")
-        )
+        versions = committed_versions(g_dir, "canonical_graph")
         assert len(versions) >= 2  # incrementally maintained, not one-shot
         latest = spark.read.parquet(f"{g_dir}/v{versions[-1]}")
 
