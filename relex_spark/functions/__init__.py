@@ -11,7 +11,6 @@ from relex_spark.functions.text import (  # noqa: F401
     span_end_exclusive_to_inclusive,
     split_ws,
     truncate_tokens,
-    zip_annotations,
 )
 from relex_spark.functions.offsets import (  # noqa: F401
     entity_marker_indicators,

@@ -1,4 +1,5 @@
-"""Text / token-array column functions (reference §2.2 P1–P9).
+"""Text / token-array column functions (reference §2.2 P1–P8; P9 needs no
+function: the TACRED reader carries NER/POS/dep as parallel arrays).
 
 Every function here returns a Catalyst ``Column`` — these stages run fully
 inside whole-stage codegen on the JVM; no Python is involved at execution
@@ -14,7 +15,6 @@ time. Reference semantics they reproduce (cited file:line are in
 * P6 end-exclusive→inclusive — semeval2010_task8.py:95-96
 * P7 span clamping        — semeval2010_task8.py:98-101; tacred.py:144-148
 * P8 lowercasing          — configs single_id ``lowercase_tokens: true``
-* P9 annotation zip       — tacred.py:128-139
 """
 
 from __future__ import annotations
@@ -139,15 +139,6 @@ def lower_tokens(tokens: Column | str) -> Column:
     """P8: per-token lowercase (single_id ``lowercase_tokens``)."""
     col = F.col(tokens) if isinstance(tokens, str) else tokens
     return F.transform(col, F.lower)
-
-
-def zip_annotations(
-    tokens: Column, ner: Column, pos: Column, dep: Column
-) -> Column:
-    """P9: per-token struct of parallel annotation arrays (tacred.py:128-139)."""
-    return F.arrays_zip(
-        tokens.alias("token"), ner.alias("ner"), pos.alias("pos"), dep.alias("dep")
-    )
 
 
 def portable_hash64(col: Column) -> Column:

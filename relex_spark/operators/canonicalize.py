@@ -234,11 +234,9 @@ def alias_components(spark: SparkSession, gazetteer_rows: list[tuple]) -> DataFr
     ``connected_components``' small-graph path, returned as a ``local_dim``.
     The rows are driver data already, so this runs zero Spark jobs."""
     from relex_spark.sources.localdim import local_dim
+    from relex_spark.sources.transcripts import entity_id
 
-    edges = {
-        (entity_id, "ent:" + surface.lower().replace(" ", "_"))
-        for surface, entity_id, *_ in gazetteer_rows
-    }
+    edges = {(eid, entity_id(surface)) for surface, eid, *_ in gazetteer_rows}
     return local_dim(
         spark, _components_local(sorted(edges)), "node string, component string"
     )

@@ -47,19 +47,6 @@ def exact_dedup_groups(
     )
 
 
-def token_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (set semantics; consumers are
-    order-free: min-hash, intersection sizes).
-
-    PERFORMANCE: this inlines ``split_ws`` into the transform's lambda body,
-    and expressions inside higher-order-function lambdas are excluded from
-    codegen CSE, so the split re-runs once per position (measured 7× on the
-    shingle stage). Use ``shingled_docs`` (two projections) on any hot path;
-    this Column form is kept for composability in small expressions.
-    """
-    return shingles_from_tokens(split_ws(text), n)
-
-
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """Shingle expression over an (ideally materialized) tokens column."""
     return F.array_distinct(
@@ -81,10 +68,12 @@ def shingled_docs(
     hashed: bool = False,
 ) -> DataFrame:
     """docs + a shingle-set column, built via two projections so the token
-    split runs ONCE per row (a multi-referenced non-cheap alias blocks
-    CollapseProject; see token_shingles docstring). ``hashed=True`` maps
-    each shingle to its portable int64 hash (what the pairwise verify joins
-    consume)."""
+    split runs ONCE per row: inlined into the shingle transform's lambda,
+    where codegen CSE does not reach, the split re-runs once per position
+    (measured 7x on the shingle stage); a multi-referenced non-cheap alias
+    blocks CollapseProject, so the split stays its own column.
+    ``hashed=True`` maps each shingle to its portable int64 hash (what the
+    pairwise verify joins consume)."""
     with_toks = docs.withColumn("__toks", split_ws(F.col(text_col)))
     sh = shingles_from_tokens(F.col("__toks"), shingle_n)
     if hashed:

@@ -47,7 +47,9 @@ def build_token_vocab(
         counts.repartitionByRange(F.desc("cnt"), F.asc("token"))
         .withColumn("pid", F.spark_partition_id())
         # pin pids across the two downstream computations (range-partitioner
-        # boundary sampling is nondeterministic between job runs)
+        # boundary sampling is nondeterministic between job runs); eager by
+        # default, so it runs its plan's jobs while the vocab is built
+        # (4 for v1_token_vocab at sf0.01)
         .localCheckpoint()
     )
     sizes = sorted(

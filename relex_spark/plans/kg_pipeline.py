@@ -39,7 +39,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from relex_spark.functions.text import clamp_span, truncate_tokens
 from relex_spark.operators.candidates import (
     detect_mentions,
     generate_candidate_pairs,
@@ -47,6 +46,7 @@ from relex_spark.operators.candidates import (
 from relex_spark.operators.canonicalize import alias_components, canonicalize_triples
 from relex_spark.scoring.scorer import broadcast_weights, score_candidates
 from relex_spark.scoring.weights import ModelWeights, build_fixture_weights
+from relex_spark.sources.readers import preprocess_candidates, tacred_tokens_and_spans
 from relex_spark.sources.sinks import read_stage, stage_is_complete, write_stage
 from relex_spark.sources.transcripts import fixture_gazetteer_rows, load_semeval_fixture
 
@@ -164,17 +164,6 @@ def score_key(encoder: str, ns_names: list[str] | None = None):
         feat.append(ns)
         key_parts.append(arr_key(ns))
     return feat, F.md5(F.concat_ws("\x01", *key_parts))
-
-
-def preprocess_candidates(candidates: DataFrame, max_len: int) -> DataFrame:
-    """P5 truncation + P7 span clamping (order fixed: SURVEY §4 barrier)."""
-    return (
-        candidates.withColumn("tokens", truncate_tokens("tokens", max_len))
-        .withColumn("head_start", clamp_span("head_start", max_len))
-        .withColumn("head_end", clamp_span("head_end", max_len))
-        .withColumn("tail_start", clamp_span("tail_start", max_len))
-        .withColumn("tail_end", clamp_span("tail_end", max_len))
-    )
 
 
 def _score_each_distinct_input(
@@ -316,45 +305,35 @@ def tacred_planted_candidates(
 ) -> DataFrame:
     """TACRED-schema candidate stage: recover planted turns by broadcast
     join against the 3-row fixture dim (annotations travel with the dim —
-    a real ingest would carry parser columns in the table), then apply the
-    P4 stage barrier in reference order (tacred.py:105-110 before :150):
-    entity masking on UNTRUNCATED tokens at UNCLAMPED spans, GloVe
-    normalization, truncate, clamp — then dependency adjacency with SDP
-    pruning + clipping (G1-G4).
+    a real ingest would carry parser columns in the table), then the TACRED
+    reader's projection (mask, normalize, truncate, clamp) — then
+    dependency adjacency with SDP pruning + clipping (G1-G4).
 
-    Narrow from the scan: broadcast join + codegen projections + one
-    Arrow-batched mapInPandas (adjacency); input partitioning flows
-    through untouched."""
-    from relex_spark.functions.text import (
-        mask_entities,
-        masking_replacements,
-        normalize_glove_tokens,
-        split_ws,
-    )
+    Narrow from the scan: broadcast join of a ``local_dim`` + codegen
+    projections + one Arrow-batched mapInPandas (adjacency); input
+    partitioning flows through untouched."""
+    from relex_spark.functions.text import split_ws
     from relex_spark.graph.adjacency import with_adjacency
-    from relex_spark.sources.transcripts import load_tacred_fixture
+    from relex_spark.sources.localdim import local_dim
+    from relex_spark.sources.transcripts import entity_id, load_tacred_fixture
 
-    dim_rows = []
-    for ex in load_tacred_fixture():
-        subj_phrase = " ".join(
-            ex["token"][ex["subj_start"] : ex["subj_end"] + 1]
+    dim_rows = [
+        (
+            " ".join(ex["token"]),
+            ex["subj_start"],
+            ex["subj_end"],
+            ex["obj_start"],
+            ex["obj_end"],
+            ex["subj_type"],
+            ex["obj_type"],
+            [int(h) for h in ex["stanford_head"]],
+            entity_id(" ".join(ex["token"][ex["subj_start"] : ex["subj_end"] + 1])),
+            entity_id(" ".join(ex["token"][ex["obj_start"] : ex["obj_end"] + 1])),
         )
-        obj_phrase = " ".join(ex["token"][ex["obj_start"] : ex["obj_end"] + 1])
-        dim_rows.append(
-            (
-                " ".join(ex["token"]),
-                ex["subj_start"],
-                ex["subj_end"],
-                ex["obj_start"],
-                ex["obj_end"],
-                ex["subj_type"],
-                ex["obj_type"],
-                [int(h) for h in ex["stanford_head"]],
-                "ent:" + subj_phrase.lower().replace(" ", "_"),
-                "ent:" + obj_phrase.lower().replace(" ", "_"),
-            )
-        )
-    dim = spark.createDataFrame(
+        for ex in load_tacred_fixture()
+    ]
+    dim = local_dim(
+        spark,
         dim_rows,
         "sent_text string, subj_start int, subj_end int, obj_start int, "
         "obj_end int, subj_type string, obj_type string, "
@@ -372,33 +351,17 @@ def tacred_planted_candidates(
         F.broadcast(dim), transcripts["text"] == dim["sent_text"]
     )
 
-    tokens = split_ws(F.col("text"))
-    head_repl, tail_repl = masking_replacements(
-        masking_mode, F.col("subj_type"), F.col("obj_type")
-    )
-    tokens = mask_entities(
-        tokens,
-        F.col("subj_start"),
-        F.col("subj_end"),
-        F.col("obj_start"),
-        F.col("obj_end"),
-        head_repl,
-        tail_repl,
-    )
-    tokens = normalize_glove_tokens(tokens)
-
-    cands = planted.select(
-        "conv_id",
-        "turn_idx",
-        F.concat_ws(":", "conv_id", "turn_idx", F.lit("1")).alias("id"),
-        truncate_tokens(tokens, max_len).alias("tokens"),
-        clamp_span("subj_start", max_len).alias("head_start"),
-        clamp_span("subj_end", max_len).alias("head_end"),
-        clamp_span("obj_start", max_len).alias("tail_start"),
-        clamp_span("obj_end", max_len).alias("tail_end"),
-        "dep_heads",
-        "subj",
-        "obj",
+    cands = preprocess_candidates(
+        planted.select(
+            "conv_id",
+            "turn_idx",
+            F.concat_ws(":", "conv_id", "turn_idx", F.lit("1")).alias("id"),
+            *tacred_tokens_and_spans(split_ws(F.col("text")), masking_mode),
+            "dep_heads",
+            "subj",
+            "obj",
+        ),
+        max_len,
     )
     return with_adjacency(cands, prune=prune, max_len=max_len)
 

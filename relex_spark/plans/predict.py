@@ -12,11 +12,11 @@ scoring stage with class probabilities attached (M18 decode).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from relex_spark.functions.text import clamp_span, split_ws, truncate_tokens
+from relex_spark.functions.text import span_end_exclusive_to_inclusive, split_ws
 from relex_spark.plans.kg_pipeline import KGPipelineConfig
 from relex_spark.scoring.scorer import broadcast_weights, score_candidates
+from relex_spark.sources.readers import preprocess_candidates
 
 
 def candidates_from_json(spark: SparkSession, records: list[dict], max_len: int) -> DataFrame:
@@ -36,13 +36,16 @@ def candidates_from_json(spark: SparkSession, records: list[dict], max_len: int)
     df = spark.createDataFrame(
         rows, "id string, text string, h0 int, h1 int, t0 int, t1 int"
     )
-    return df.select(
-        "id",
-        truncate_tokens(split_ws("text"), max_len).alias("tokens"),  # P5
-        clamp_span(F.col("h0"), max_len).alias("head_start"),
-        clamp_span(F.col("h1") - 1, max_len).alias("head_end"),   # P6 excl→incl
-        clamp_span(F.col("t0"), max_len).alias("tail_start"),
-        clamp_span(F.col("t1") - 1, max_len).alias("tail_end"),
+    return preprocess_candidates(
+        df.select(
+            "id",
+            split_ws("text").alias("tokens"),
+            df["h0"].alias("head_start"),
+            span_end_exclusive_to_inclusive("h1").alias("head_end"),
+            df["t0"].alias("tail_start"),
+            span_end_exclusive_to_inclusive("t1").alias("tail_end"),
+        ),
+        max_len,
     )
 
 

@@ -42,6 +42,8 @@ def _lit(v) -> str:
         return repr(v)
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, list):
+        return "ARRAY(" + ", ".join(_lit(x) for x in v) + ")"
     raise TypeError(f"local_dim cell type not supported: {type(v)!r}")
 
 
@@ -50,7 +52,9 @@ def local_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
 
     ``schema`` is a DDL string like ``"surface string, entity_id string"``;
     every cell is CAST to the declared type, so int/bigint and float/double
-    distinctions are exact. Rows may be tuples or single values (1-column).
+    distinctions are exact. A column may also be an array of one of those
+    types (``"dep_heads array<int>"``), its cells Python lists. Rows may be
+    tuples or single values (1-column).
     """
     # String cells are escaped for Spark's DEFAULT string-literal mode
     # (backslash escapes). Under spark.sql.parser.escapedStringLiterals=true
@@ -63,7 +67,8 @@ def local_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
         and any(
             isinstance(v, str) and ("'" in v or "\\" in v)
             for row in rows
-            for v in (row if isinstance(row, (tuple, list)) else (row,))
+            for cell in (row if isinstance(row, (tuple, list)) else (row,))
+            for v in (cell if isinstance(cell, list) else (cell,))
         )
     ):
         raise ValueError(
@@ -75,7 +80,8 @@ def local_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     for part in schema.split(","):
         name, typ = part.strip().rsplit(" ", 1)
         typ = typ.lower()
-        if typ not in _SQL_TYPES:
+        elem = typ[6:-1] if typ.startswith("array<") and typ.endswith(">") else typ
+        if elem not in _SQL_TYPES:
             raise ValueError(f"local_dim type not supported: {typ}")
         fields.append((name.strip().strip("`"), typ))
     ncol = len(fields)

@@ -13,11 +13,15 @@ row (SURVEY §1.5):
     id STRING, tokens ARRAY<STRING>,
     head_start INT, head_end INT, tail_start INT, tail_end INT  (inclusive),
     label STRING (nullable at predict time)
+
+Every producer of that row (both readers, the JSON predictor and both KG
+corpora) ends in this module's ``preprocess_candidates``, as every
+reference instance comes from its reader's ``text_to_instance``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,8 +30,11 @@ from relex_spark.functions.text import (
     mask_entities,
     masking_replacements,
     normalize_glove_tokens,
+    span_end_exclusive_to_inclusive,
     truncate_tokens,
 )
+
+SPAN_COLUMNS = ("head_start", "head_end", "tail_start", "tail_end")
 
 SEMEVAL_SCHEMA = T.StructType(
     [
@@ -68,21 +75,53 @@ def read_tacred_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(TACRED_SCHEMA).option("multiLine", True).json(path)
 
 
+def preprocess_candidates(candidates: DataFrame, max_len: int) -> DataFrame:
+    """P5 truncation + P7 span clamping of the candidate row, in place: one
+    projection that rewrites ``tokens`` and the four inclusive span columns
+    and passes every other column through at its position. Runs after any
+    P4/P3/P6 step (order fixed: SURVEY §4 barrier)."""
+    return candidates.withColumns(
+        {
+            "tokens": truncate_tokens("tokens", max_len),
+            **{c: clamp_span(c, max_len) for c in SPAN_COLUMNS},
+        }
+    )
+
+
+def tacred_tokens_and_spans(tokens: Column, masking_mode: str | None) -> list[Column]:
+    """A TACRED row's ``tokens`` and inclusive spans before P5/P7 (no P6):
+    P4 entity masking when ``masking_mode`` is given, at the untruncated
+    ``subj_*``/``obj_*`` spans (tacred.py:105-110), then P3 GloVe
+    normalization (:133)."""
+    spans = [F.col(c) for c in ("subj_start", "subj_end", "obj_start", "obj_end")]
+    if masking_mode is not None:
+        repl = masking_replacements(masking_mode, F.col("subj_type"), F.col("obj_type"))
+        tokens = mask_entities(tokens, *spans, *repl)
+    return [
+        normalize_glove_tokens(tokens).alias("tokens"),
+        *(c.alias(name) for c, name in zip(spans, SPAN_COLUMNS)),
+    ]
+
+
 def semeval_to_candidates(df: DataFrame, max_len: int) -> DataFrame:
     """SemEval reader semantics (semeval2010_task8.py:80-117):
 
     join-then-split round trip (P1/P2) is the identity on these token lists,
-    so tokens pass through; truncate to ``max_len`` (P5); convert spans
-    end-exclusive → inclusive (P6); clamp all four offsets (P7).
+    so tokens pass through; convert spans end-exclusive → inclusive (P6);
+    then truncate to ``max_len`` (P5) and clamp all four offsets (P7).
     """
-    return df.select(
-        F.col("id"),
-        truncate_tokens("tokens", max_len).alias("tokens"),
-        clamp_span(F.col("entities")[0][0], max_len).alias("head_start"),
-        clamp_span(F.col("entities")[0][1] - 1, max_len).alias("head_end"),
-        clamp_span(F.col("entities")[1][0], max_len).alias("tail_start"),
-        clamp_span(F.col("entities")[1][1] - 1, max_len).alias("tail_end"),
-        F.col("label"),
+    ents = F.col("entities")
+    return preprocess_candidates(
+        df.select(
+            F.col("id"),
+            F.col("tokens"),
+            ents[0][0].alias("head_start"),
+            span_end_exclusive_to_inclusive(ents[0][1]).alias("head_end"),
+            ents[1][0].alias("tail_start"),
+            span_end_exclusive_to_inclusive(ents[1][1]).alias("tail_end"),
+            F.col("label"),
+        ),
+        max_len,
     )
 
 
@@ -96,31 +135,15 @@ def tacred_to_candidates(
     before :150), then GloVe normalization per token (:133), then
     truncation, then span clamping. Spans are already inclusive (no P6).
     """
-    tokens = F.col("token")
-    if masking_mode is not None:
-        head_repl, tail_repl = masking_replacements(
-            masking_mode, F.col("subj_type"), F.col("obj_type")
-        )
-        tokens = mask_entities(
-            tokens,
-            F.col("subj_start"),
-            F.col("subj_end"),
-            F.col("obj_start"),
-            F.col("obj_end"),
-            head_repl,
-            tail_repl,
-        )
-    tokens = normalize_glove_tokens(tokens)
-    return df.select(
-        F.col("id"),
-        truncate_tokens(tokens, max_len).alias("tokens"),
-        clamp_span("subj_start", max_len).alias("head_start"),
-        clamp_span("subj_end", max_len).alias("head_end"),
-        clamp_span("obj_start", max_len).alias("tail_start"),
-        clamp_span("obj_end", max_len).alias("tail_end"),
-        F.col("relation").alias("label"),
-        F.col("stanford_ner").alias("ner"),
-        F.col("stanford_pos").alias("pos"),
-        F.col("stanford_deprel").alias("dep"),
-        F.col("stanford_head").alias("dep_heads"),
+    return preprocess_candidates(
+        df.select(
+            F.col("id"),
+            *tacred_tokens_and_spans(F.col("token"), masking_mode),
+            F.col("relation").alias("label"),
+            F.col("stanford_ner").alias("ner"),
+            F.col("stanford_pos").alias("pos"),
+            F.col("stanford_deprel").alias("dep"),
+            F.col("stanford_head").alias("dep_heads"),
+        ),
+        max_len,
     )

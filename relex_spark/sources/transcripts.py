@@ -103,6 +103,12 @@ def _variant_suffix(v: F.Column) -> F.Column:
     return F.when(v > 0, F.concat_ws(" ", *parts))
 
 
+def entity_id(phrase: str) -> str:
+    """The entity id a surface phrase mints: ``ent:`` + the lowercase
+    phrase with spaces as underscores — shared by every alias of it."""
+    return "ent:" + phrase.lower().replace(" ", "_")
+
+
 def load_semeval_fixture() -> list[dict]:
     """The 10 SemEval fixture examples (id, tokens, label, entities)."""
     text = (
@@ -138,7 +144,7 @@ def tacred_gazetteer_rows() -> list[tuple[str, str, str]]:
             (ex["obj_start"], ex["obj_end"], ex["obj_type"]),
         ):
             phrase = " ".join(ex["token"][s : e + 1])
-            eid = "ent:" + phrase.lower().replace(" ", "_")
+            eid = entity_id(phrase)
             for alias in (phrase, phrase.lower(), phrase.capitalize()):
                 if alias not in seen:
                     seen.add(alias)
@@ -206,7 +212,7 @@ def fixture_gazetteer_rows() -> list[tuple[str, str, str]]:
     for ex in load_semeval_fixture():
         for (start, end_ex) in ex["entities"]:
             phrase = " ".join(ex["tokens"][start:end_ex])
-            eid = "ent:" + phrase.lower().replace(" ", "_")
+            eid = entity_id(phrase)
             for alias in (phrase, phrase.lower(), phrase.capitalize()):
                 if alias not in seen:
                     seen.add(alias)

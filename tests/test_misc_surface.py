@@ -326,7 +326,7 @@ def test_detect_mentions_rejects_duplicate_surfaces(spark):
 def test_local_dim_under_escaped_string_literals(spark):
     """Under spark.sql.parser.escapedStringLiterals=true a quoted cell
     cannot be rendered safely: local_dim must fail loudly naming the conf,
-    while quote-free rows still round-trip exactly."""
+    while quote-free rows (array cells too) still round-trip exactly."""
     import pytest
 
     from relex_spark.sources.localdim import local_dim
@@ -340,6 +340,14 @@ def test_local_dim_under_escaped_string_literals(spark):
         rows = [("New York", 1), ("ent:q1", 2), (None, 3)]
         got = local_dim(spark, rows, "surface string, n int").collect()
         assert [tuple(r) for r in got] == rows
+        # array cells: the guard looks inside them, and an array<int>
+        # column (empty and NULL cells included) round-trips with its type
+        with pytest.raises(ValueError, match=conf):
+            local_dim(spark, [(["a", "O'Brien"],)], "names array<string>")
+        rows = [("a", [2, 0, -1]), ("b", []), ("c", None), ("d", [7, None])]
+        dim = local_dim(spark, rows, "k string, heads array<int>")
+        assert dim.schema["heads"].dataType.simpleString() == "array<int>"
+        assert [tuple(r) for r in dim.collect()] == rows
     finally:
         spark.conf.set(conf, prev)
 

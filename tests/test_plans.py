@@ -253,3 +253,19 @@ def test_cents_sum_past_2_53_fails_loudly(spark, tmp_path):
         with pytest.raises(Exception, match=r"exceeds 2\^53") as err:
             dq.QUERIES[name](spark, str(tmp_path)).collect()
         assert "USER_RAISED_EXCEPTION" in str(err.value)
+
+
+def test_tacred_planted_candidates_plan_has_no_python_rdd(spark):
+    """The TACRED fixture dim is a ``local_dim`` (a LocalRelation), not a
+    Python-RDD plan: every materialization of a LogicalRDD dim runs
+    Python-worker tasks for three rows (sources/localdim.py)."""
+    from relex_spark.plans.kg_pipeline import tacred_planted_candidates
+    from relex_spark.sources.transcripts import transcripts_from_documents_tacred
+
+    docs = spark.range(30).select(
+        F.col("id").alias("doc_id"), F.lit("plain filler words").alias("text")
+    )
+    cands = tacred_planted_candidates(spark, transcripts_from_documents_tacred(docs))
+    plan = cands._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan, plan
