@@ -59,11 +59,10 @@ def join_ws(tokens: Column | str) -> Column:
 
 def normalize_glove_tokens(tokens: Column | str) -> Column:
     """P3: map PTB bracket tokens to literal brackets, identity otherwise."""
+    from relex_spark.sources.localdim import local_map
+
     col = F.col(tokens) if isinstance(tokens, str) else tokens
-    pairs: list[Column] = []
-    for k, v in GLOVE_BRACKET_MAP.items():
-        pairs += [F.lit(k), F.lit(v)]
-    bracket_map = F.create_map(*pairs)
+    bracket_map = local_map(GLOVE_BRACKET_MAP, "string", "string")
     return F.transform(col, lambda t: F.coalesce(bracket_map[t], t))
 
 

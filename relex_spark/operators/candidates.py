@@ -4,8 +4,8 @@ The reference consumes pre-annotated entity spans
 (semeval2010_task8.py:71-76); the transcript pipeline must *find* them. Two
 physical strategies, same semantics:
 
-* ``detect_mentions`` — zero-shuffle: the gazetteer becomes literal SQL maps
-  (driver-collected; gazetteers are broadcast-sized dims by definition) and
+* ``detect_mentions`` — zero-shuffle: the gazetteer rows become
+  ``local_map`` literals (gazetteers are dim-sized by definition) and
   mention extraction/overlap-resolution/pairing are per-row higher-order
   functions inside whole-stage codegen. Preferred ≤ ~10k surfaces.
 * ``detect_mentions_join`` — explode token n-grams and broadcast-hash-join
@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from relex_spark.functions.text import split_ws
+from relex_spark.sources.localdim import local_map
 
 MENTION_STRUCT = "struct<start:int,end:int,surface:string,entity_id:string,entity_type:string>"
 
@@ -116,19 +117,10 @@ def detect_mentions(
         )
     max_n = max(len(s.split(" ")) for s, _, _ in gazetteer_rows)
 
-    id_pairs: list[Column] = []
-    ty_pairs: list[Column] = []
-    start_tokens: dict[str, bool] = {}
-    for surface, entity_id, entity_type in gazetteer_rows:
-        id_pairs += [F.lit(surface), F.lit(entity_id)]
-        ty_pairs += [F.lit(surface), F.lit(entity_type)]
-        start_tokens[surface.split(" ")[0]] = True
-    id_map = F.create_map(*id_pairs)
-    ty_map = F.create_map(*ty_pairs)
-    gate_pairs: list[Column] = []
-    for tok in sorted(start_tokens):
-        gate_pairs += [F.lit(tok), F.lit(True)]
-    start_gate = F.create_map(*gate_pairs)
+    id_map = local_map({s: eid for s, eid, _ in gazetteer_rows}, "string", "string")
+    ty_map = local_map({s: ty for s, _, ty in gazetteer_rows}, "string", "string")
+    starts = sorted({s.split(" ")[0] for s in surfaces})
+    start_gate = local_map(dict.fromkeys(starts, True), "string", "boolean")
 
     df = with_tokens(transcripts)
     grams = _ngram_candidates(F.col("tokens"), max_n, start_gate=start_gate)

@@ -14,9 +14,9 @@ Three pieces:
    (zero Spark jobs); every KG entry point builds its map this way.
 
 3. ``canonicalize_subj_obj`` — the one subj/obj rewrite through a component
-   map (left joins, broadcast by the callers). ``canonicalize_triples`` rewrites with it
-   and aggregates duplicate triples with a salted two-phase count for hot
-   (subj, pred, obj) keys.
+   map, inlined as a ``local_map`` literal (no join). ``canonicalize_triples``
+   rewrites with it and aggregates duplicate triples with a salted two-phase
+   count for hot (subj, pred, obj) keys.
 
 The reference has no multi-document entity resolution (single-sentence
 pipelines); this stage is the engine-side requirement from BASELINE.json.
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from relex_spark.sources.localdim import local_dim, local_map
 
 # Round bound of the distributed large-star/small-star loop. It converges in
 # O(log n) rounds in practice, so 20 only stops a pathological input.
@@ -171,8 +173,6 @@ def connected_components(edges: DataFrame, local_threshold: int = 4096) -> DataF
     if local_threshold > 0:
         probe = edges.select("src", "dst").limit(local_threshold + 1).collect()
         if len(probe) <= local_threshold:
-            from relex_spark.sources.localdim import local_dim
-
             labels = _components_local([(r["src"], r["dst"]) for r in probe])
             return local_dim(
                 edges.sparkSession, labels, "node string, component string"
@@ -233,7 +233,6 @@ def alias_components(spark: SparkSession, gazetteer_rows: list[tuple]) -> DataFr
     ``alias_edges_from_gazetteer`` solved by the union-find of
     ``connected_components``' small-graph path, returned as a ``local_dim``.
     The rows are driver data already, so this runs zero Spark jobs."""
-    from relex_spark.sources.localdim import local_dim
     from relex_spark.sources.transcripts import entity_id
 
     edges = {(eid, entity_id(surface)) for surface, eid, *_ in gazetteer_rows}
@@ -243,16 +242,21 @@ def alias_components(spark: SparkSession, gazetteer_rows: list[tuple]) -> DataFr
 
 
 def canonicalize_subj_obj(df: DataFrame, component_map: DataFrame) -> DataFrame:
-    """Rewrite ``subj`` and ``obj`` through a (node, component) map by two
-    left joins (ids outside the map stay as they are); every other column
-    passes through. Callers wrap a dim-sized map in ``F.broadcast``."""
-    for side in ("subj", "obj"):
-        df = (
-            df.join(component_map, df[side] == component_map["node"], "left")
-            .withColumn(side, F.coalesce("component", side))
-            .drop("node", "component")
-        )
-    return df
+    """Rewrite ``subj`` and ``obj`` through a dim-sized (node, component)
+    map (ids outside the map, NULLs included, stay as they are); every
+    other column passes through. The map is collected to the driver —
+    zero jobs for a ``local_dim``, which is what ``alias_components`` and
+    ``connected_components``' small-graph path return — and inlined as one
+    ``local_map`` literal, so the rewrite is a projection, not a join."""
+    rows = component_map.collect()
+    lookup = local_map(
+        {r["node"]: r["component"] for r in rows if r["node"] is not None},
+        "string",
+        "string",
+    )
+    return df.withColumns(
+        {side: F.coalesce(lookup[F.col(side)], side) for side in ("subj", "obj")}
+    )
 
 
 def canonicalize_triples(
@@ -268,9 +272,11 @@ def canonicalize_triples(
     (subj, pred, obj, salt) — splitting hot triples across ``salt_buckets``
     reducers — then re-aggregated; for moderate skew, AQE's skew handling
     alone suffices (salt_buckets=0).
+
+    ``broadcast_map`` has no effect: ``canonicalize_subj_obj`` inlines the
+    map as a literal, so there is no join left to broadcast. It stays in
+    the signature for callers that still pass it.
     """
-    if broadcast_map:
-        component_map = F.broadcast(component_map)
     t = canonicalize_subj_obj(triples, component_map).select(
         "subj",
         F.col("label").alias("pred"),

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from relex_spark.sources.localdim import local_map
+
 
 def build_token_vocab(
     tokens_df: DataFrame,
@@ -64,10 +66,7 @@ def build_token_vocab(
     if offsets:
         # one small int per partition — a literal map beats a join even at
         # thousands of partitions
-        off_expr = F.element_at(
-            F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-            F.col("pid"),
-        )
+        off_expr = F.element_at(local_map(offsets, "int", "int"), F.col("pid"))
     else:
         off_expr = F.lit(0)
     w = Window.partitionBy("pid").orderBy(F.desc("cnt"), F.asc("token"))

@@ -3464,12 +3464,12 @@ def kg_canonical_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity canonicalization at corpus scale, label-free: candidate
     pairs → subj/obj rewritten through the pipeline's alias component map
     (``alias_components``: driver-side union-find over the gazetteer alias
-    graph, broadcast join) → (subj, obj) co-occurrence rollup. The oracle's
-    component map is an independent plain-Python union-find, so the map
-    and the rewrite are driver-cross-checked. The 40-edge gazetteer graph
-    never reaches the distributed large-star/small-star path; that path
-    is checked against the driver-side one in tests/test_pipeline.py
-    (``local_threshold=0``)."""
+    graph, inlined as a literal map) → (subj, obj) co-occurrence rollup.
+    The oracle's component map is an independent plain-Python union-find,
+    so the map and the rewrite are driver-cross-checked. The 40-edge
+    gazetteer graph never reaches the distributed large-star/small-star
+    path; that path is checked against the driver-side one in
+    tests/test_pipeline.py (``local_threshold=0``)."""
     from relex_spark.operators.candidates import (
         detect_mentions,
         generate_candidate_pairs,
@@ -3487,9 +3487,7 @@ def kg_canonical_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_documents(docs)
     m = detect_mentions(t, fixture_gazetteer_rows(), keep_text=False)
     pairs = generate_candidate_pairs(m, 10).select("id", "subj", "obj")
-    r = canonicalize_subj_obj(
-        pairs, F.broadcast(alias_components(spark, fixture_gazetteer_rows()))
-    )
+    r = canonicalize_subj_obj(pairs, alias_components(spark, fixture_gazetteer_rows()))
     return r.groupBy("subj", "obj").agg(
         F.count(F.lit(1)).cast("bigint").alias("support"),
         F.min("id").alias("first_id"),
@@ -3533,7 +3531,7 @@ def kg_pair_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage, and total support — the first-seen/last-seen/provenance
     surface a downstream triple store exposes (turn_idx maps affinely to
     the transcript ts column, sources/transcripts.py, so the window IS the
-    time interval). Same plan skeleton as kg_canonical_pairs (broadcast
+    time interval). Same plan skeleton as kg_canonical_pairs (literal
     component map, ONE wide groupBy; countDistinct adds the standard
     two-phase expand, still keyed by the same (subj, obj))."""
     from relex_spark.operators.candidates import (
@@ -3555,9 +3553,7 @@ def kg_pair_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = generate_candidate_pairs(m, 10).select(
         "conv_id", "turn_idx", "subj", "obj"
     )
-    r = canonicalize_subj_obj(
-        pairs, F.broadcast(alias_components(spark, fixture_gazetteer_rows()))
-    )
+    r = canonicalize_subj_obj(pairs, alias_components(spark, fixture_gazetteer_rows()))
     return r.groupBy("subj", "obj").agg(
         F.min("turn_idx").cast("int").alias("first_turn"),
         F.max("turn_idx").cast("int").alias("last_turn"),

@@ -19,9 +19,10 @@ Shuffle census for the whole plan (the 100 TB argument):
     boilerplate heavily). With score_distinct=False (and always on the
     streaming path) scoring is in-place and the chain stays zero-shuffle.
   * canonicalize: the component map is tiny (solved on the driver from
-    the gazetteer rows) and broadcast; triple dedup groupBy(subj,pred,obj)
-    is the plan's ONE wide stage, AQE-coalesced and optionally salted for
-    hot triples.
+    the gazetteer rows) and inlined as a literal map, so the subj/obj
+    rewrite is a projection; triple dedup groupBy(subj,pred,obj) is the
+    plan's ONE wide stage, AQE-coalesced and optionally salted for hot
+    triples.
   * checkpoints: with checkpoint_dir set, each stage writes parquet + a
     manifest (resume boundary; kgbench's kg_refcap writes and resumes them
     on every pass).
@@ -410,8 +411,8 @@ def run_tacred_kg_pipeline(
     the SemEval flagship: tacred_planted_candidates (P4 barrier + G1-G4
     adjacency), tacred_scored_candidates (GCN scoring with
     dedup-before-inference), and entity canonicalization over the TACRED
-    alias gazetteer. Canonicalize's component map is broadcast; the triple
-    rollup is the one wide stage.
+    alias gazetteer. Canonicalize's component map is a literal map; the
+    triple rollup is the one wide stage.
 
     Returns canonical triples: subj, pred, obj, support, max_score,
     first_id."""

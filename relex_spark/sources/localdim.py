@@ -13,11 +13,17 @@ parses straight to a ``LocalTableScan``: zero tasks, zero Python workers,
 and broadcast builds read it driver-side. Intended for dim-sized data only
 (gazetteers, label maps, fixture tables); the SQL text grows linearly with
 the rows, so callers should stay under a few thousand rows.
+
+``local_map`` renders a driver-held lookup the same way, as one literal
+``CAST(map(...) AS MAP<K, V>)`` built in one JVM call. Strings render as
+UTF-8 hex literals, exact whatever ``spark.sql.parser.escapedStringLiterals``
+says.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _SQL_TYPES = {"string", "int", "bigint", "double", "float", "boolean"}
 
@@ -41,7 +47,7 @@ def _lit(v) -> str:
     if isinstance(v, int):
         return repr(v)
     if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
     if isinstance(v, list):
         return "ARRAY(" + ", ".join(_lit(x) for x in v) + ")"
     raise TypeError(f"local_dim cell type not supported: {type(v)!r}")
@@ -56,26 +62,6 @@ def local_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     types (``"dep_heads array<int>"``), its cells Python lists. Rows may be
     tuples or single values (1-column).
     """
-    # String cells are escaped for Spark's DEFAULT string-literal mode
-    # (backslash escapes). Under spark.sql.parser.escapedStringLiterals=true
-    # neither backslash nor doubled-quote escaping applies inside
-    # single-quoted literals, so quoting-sensitive cells cannot be rendered
-    # safely — fail loudly instead of corrupting data.
-    if (
-        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        == "true"
-        and any(
-            isinstance(v, str) and ("'" in v or "\\" in v)
-            for row in rows
-            for cell in (row if isinstance(row, (tuple, list)) else (row,))
-            for v in (cell if isinstance(cell, list) else (cell,))
-        )
-    ):
-        raise ValueError(
-            "local_dim cannot escape quotes/backslashes under "
-            "spark.sql.parser.escapedStringLiterals=true — unset it or use "
-            "createDataFrame for this dim"
-        )
     fields = []
     for part in schema.split(","):
         name, typ = part.strip().rsplit(" ", 1)
@@ -105,3 +91,12 @@ def local_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     return spark.sql(
         f"SELECT {select} FROM (VALUES {', '.join(tuples)}) AS t({colnames})"
     )
+
+
+def local_map(pairs: dict, key_type: str, value_type: str) -> Column:
+    """Literal ``MAP<key_type, value_type>`` column over a driver-side
+    ``{key: value}`` dict (no None key), its cells rendered as in
+    ``local_dim``; an empty dict gives a typed empty map. Dim-sized
+    lookups only: the map is one SQL literal."""
+    cells = ", ".join(f"{_lit(k)}, {_lit(v)}" for k, v in pairs.items())
+    return F.expr(f"CAST(map({cells}) AS MAP<{key_type}, {value_type}>)")

@@ -204,14 +204,14 @@ def transitions(by: dict, variant: str, key: str) -> list[tuple[int, int, float,
 
 def fixed_costs(by: dict) -> dict[int, tuple[float, float]]:
     """Per level with both refcap sizes: (fixed job cost c, marginal sec
-    per turn k) of t = c + k·n. The corpora are 4× apart in convs, so
-    c = (4·t1x − t4x) / 3; k divides by the measured turn difference."""
+    per turn k) of the line t = c + k·n through both measured points, so
+    k = (t4x − t1x) / (n4x − n1x) and c = t1x − k·n1x."""
     out = {}
     for c in sorted(c for c, v in by if v == "refcap"):
         a, b = by[c, "refcap"], by.get((c, "refcap4x"))
         if b:
             k = (b["sec"] - a["sec"]) / (b["n_turns"] - a["n_turns"])
-            out[c] = ((4 * a["sec"] - b["sec"]) / 3, k)
+            out[c] = (a["sec"] - k * a["n_turns"], k)
     return out
 
 

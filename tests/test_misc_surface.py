@@ -324,32 +324,49 @@ def test_detect_mentions_rejects_duplicate_surfaces(spark):
 
 
 def test_local_dim_under_escaped_string_literals(spark):
-    """Under spark.sql.parser.escapedStringLiterals=true a quoted cell
-    cannot be rendered safely: local_dim must fail loudly naming the conf,
-    while quote-free rows (array cells too) still round-trip exactly."""
-    import pytest
+    """Strings render as UTF-8 hex literals, so quotes, backslashes, empty
+    and non-ASCII text, newlines and NULLs round-trip exactly through
+    local_dim (scalar and array cells) and local_map with
+    spark.sql.parser.escapedStringLiterals off and on."""
+    from relex_spark.sources.localdim import local_dim, local_map
 
-    from relex_spark.sources.localdim import local_dim
-
+    texts = ["O'Brien", "a\\b", "", "Zürich ☃", "line\nbreak", 'say "hi"']
     conf = "spark.sql.parser.escapedStringLiterals"
     prev = spark.conf.get(conf)
-    spark.conf.set(conf, "true")
     try:
-        with pytest.raises(ValueError, match=conf):
-            local_dim(spark, [("O'Brien", 1)], "surface string, n int")
-        rows = [("New York", 1), ("ent:q1", 2), (None, 3)]
-        got = local_dim(spark, rows, "surface string, n int").collect()
-        assert [tuple(r) for r in got] == rows
-        # array cells: the guard looks inside them, and an array<int>
-        # column (empty and NULL cells included) round-trips with its type
-        with pytest.raises(ValueError, match=conf):
-            local_dim(spark, [(["a", "O'Brien"],)], "names array<string>")
-        rows = [("a", [2, 0, -1]), ("b", []), ("c", None), ("d", [7, None])]
-        dim = local_dim(spark, rows, "k string, heads array<int>")
-        assert dim.schema["heads"].dataType.simpleString() == "array<int>"
-        assert [tuple(r) for r in dim.collect()] == rows
+        for mode in ("false", "true"):
+            spark.conf.set(conf, mode)
+            rows = [(t, i) for i, t in enumerate(texts)] + [(None, 99)]
+            got = local_dim(spark, rows, "surface string, n int").collect()
+            assert [tuple(r) for r in got] == rows, mode
+            rows = [("a", texts), ("b", []), ("c", None), ("d", ["x", None])]
+            dim = local_dim(spark, rows, "k string, names array<string>")
+            assert dim.schema["names"].dataType.simpleString() == "array<string>"
+            assert [tuple(r) for r in dim.collect()] == rows, mode
+            lookup = {t: t[::-1] for t in texts}
+            (row,) = spark.range(1).select(
+                local_map(lookup, "string", "string").alias("m"),
+                local_map({}, "string", "boolean").alias("empty"),
+            ).collect()
+            assert row["m"] == lookup and row["empty"] == {}, mode
     finally:
         spark.conf.set(conf, prev)
+
+
+def test_local_map_is_the_only_map_builder_in_source():
+    """Every lookup built from driver rows goes through
+    sources/localdim.local_map (one SQL literal per map); no other engine
+    module builds one with create_map."""
+    import relex_spark
+
+    root = os.path.dirname(relex_spark.__file__)
+    allowed = os.path.join(root, "sources", "localdim.py")
+    hits = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            if path != allowed and "create_map(" in f.read():
+                hits.append(os.path.relpath(path, root))
+    assert not hits, hits
 
 
 def test_detect_mentions_join_keeps_tokens_on_no_hit_turns(spark):

@@ -15,6 +15,7 @@ from pyspark.sql.types import StructType
 from relex_spark.operators.canonicalize import (
     alias_components,
     alias_edges_from_gazetteer,
+    canonicalize_subj_obj,
     canonicalize_triples,
     connected_components,
 )
@@ -31,6 +32,7 @@ from relex_spark.sources.readers import read_semeval_jsonl, semeval_to_candidate
 from relex_spark.sources.sinks import MANIFEST, read_stage, stage_is_complete, write_stage
 from relex_spark.sources.transcripts import (
     fixture_gazetteer_rows,
+    gazetteer_df,
     synthesize_transcripts,
     tacred_gazetteer_rows,
 )
@@ -108,7 +110,7 @@ def test_checkpoint_resume_equivalence(spark):
         # job budget: a stage commit counts rows from the parquet footers and
         # a read takes its schema from the manifest, so neither re-scans
         jobs = sc.statusTracker().getJobIdsForGroup
-        assert len(jobs("test.checkpoint.first")) <= 8
+        assert len(jobs("test.checkpoint.first")) <= 7
         assert len(jobs("test.checkpoint.resume")) <= 1
         # a committed canonical stage is the whole resume: with the scored
         # stage gone, nothing is rescored and that directory stays gone
@@ -215,12 +217,15 @@ def test_pipeline_canonicalizes_through_config_gazetteer(spark):
 )
 def test_alias_components_matches_spark_composition(spark, rows):
     """alias_components gives the Spark composition's (node, component)
-    rows, and building it runs no Spark job."""
+    rows, and neither building it nor building the subj/obj rewrite over
+    it runs a Spark job."""
     sc = spark.sparkContext
     group = "test.alias_components"
+    pairs = local_dim(spark, [("ent:x", "ent:y")], "subj string, obj string")
     sc.setJobGroup(group, group)
     try:
         driver_side = alias_components(spark, rows)
+        canonicalize_subj_obj(pairs, driver_side)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
@@ -231,25 +236,43 @@ def test_alias_components_matches_spark_composition(spark, rows):
 
 
 def test_salted_canonicalization_parity(spark):
+    """Salted and unsalted canonicalization agree, and so do the map
+    sources: the distributed-path component map (a non-local DataFrame)
+    and alias_components give the same triples. A NULL subj and an id
+    outside the map pass through the rewrite unchanged."""
     t = synthesize_transcripts(spark, n_convs=15)
     cfg = KGPipelineConfig()
-    scored = build_triples(t, cfg).cache()
-    from relex_spark.operators.canonicalize import alias_edges_from_gazetteer
-    from relex_spark.sources.transcripts import gazetteer_df
-
-    comp = connected_components(alias_edges_from_gazetteer(gazetteer_df(spark)))
-    comp = comp.localCheckpoint(eager=True)
-
-    plain = {
-        (r["subj"], r["pred"], r["obj"], r["support"])
-        for r in canonicalize_triples(scored, comp, salt_buckets=0).collect()
+    built = build_triples(t, cfg)
+    extra = local_dim(
+        spark,
+        [
+            (None, "Cause-Effect(e1,e2)", "ent:acme", "c_null", 0, "x1", 0.9),
+            ("ent:nowhere", "Cause-Effect(e1,e2)", "ent:acme", "c_out", 0, "x2", 0.8),
+        ],
+        "subj string, label string, obj string, conv_id string, turn_idx int, "
+        "id string, score double",
+    )
+    scored = built.unionByName(extra, allowMissingColumns=True).cache()
+    maps = {
+        "distributed": connected_components(
+            alias_edges_from_gazetteer(gazetteer_df(spark)), local_threshold=0
+        ),
+        "alias_components": alias_components(spark, fixture_gazetteer_rows()),
     }
-    salted = {
-        (r["subj"], r["pred"], r["obj"], r["support"])
-        for r in canonicalize_triples(scored, comp, salt_buckets=8).collect()
-    }
+    assert not maps["distributed"].isLocal()
+
+    results = {}
+    for name, comp in maps.items():
+        for salt in (0, 8):
+            results[name, salt] = {
+                (r["subj"], r["pred"], r["obj"], r["support"])
+                for r in canonicalize_triples(scored, comp, salt_buckets=salt).collect()
+            }
     scored.unpersist()
-    assert plain == salted and plain
+    want = results["distributed", 0]
+    assert want and all(got == want for got in results.values())
+    assert (None, "Cause-Effect(e1,e2)", "ent:acme", 1) in want
+    assert ("ent:nowhere", "Cause-Effect(e1,e2)", "ent:acme", 1) in want
 
 
 def test_text_invariant_holds_through_pipeline(spark):

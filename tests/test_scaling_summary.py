@@ -68,7 +68,7 @@ def test_r5_efficiency_and_fixed_cost(tool):
     assert _efficiency(tool, "scaling_r5.jsonl", "toy") == 0.656
     by = tool.latest(tool.load_records(path))
     fixed = {c: round(cost, 2) for c, (cost, _) in tool.fixed_costs(by).items()}
-    assert fixed == {2: 15.52, 8: 6.52, 32: 2.11}
+    assert fixed == {2: 15.44, 8: 6.50, 32: 2.10}
     md = tool.summarize(path)
     for c, cost in fixed.items():
         assert f"- local[{c}]: fixed job cost {cost:.2f} s" in md
