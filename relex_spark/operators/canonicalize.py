@@ -247,7 +247,10 @@ def canonicalize_subj_obj(df: DataFrame, component_map: DataFrame) -> DataFrame:
     other column passes through. The map is collected to the driver —
     zero jobs for a ``local_dim``, which is what ``alias_components`` and
     ``connected_components``' small-graph path return — and inlined as one
-    ``local_map`` literal, so the rewrite is a projection, not a join."""
+    ``local_map`` literal, so the rewrite is a projection, not a join.
+    It is for dim-sized maps only: the whole map is collected, and each
+    lookup's cost grows with the map's size, so like ``local_dim`` callers
+    should stay under a few thousand rows."""
     rows = component_map.collect()
     lookup = local_map(
         {r["node"]: r["component"] for r in rows if r["node"] is not None},

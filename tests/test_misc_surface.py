@@ -326,7 +326,8 @@ def test_detect_mentions_rejects_duplicate_surfaces(spark):
 def test_local_dim_under_escaped_string_literals(spark):
     """Strings render as UTF-8 hex literals, so quotes, backslashes, empty
     and non-ASCII text, newlines and NULLs round-trip exactly through
-    local_dim (scalar and array cells) and local_map with
+    local_dim (scalar, array<string> and array<int> cells, empty, NULL and
+    NULL-element arrays included) and local_map with
     spark.sql.parser.escapedStringLiterals off and on."""
     from relex_spark.sources.localdim import local_dim, local_map
 
@@ -342,6 +343,10 @@ def test_local_dim_under_escaped_string_literals(spark):
             rows = [("a", texts), ("b", []), ("c", None), ("d", ["x", None])]
             dim = local_dim(spark, rows, "k string, names array<string>")
             assert dim.schema["names"].dataType.simpleString() == "array<string>"
+            assert [tuple(r) for r in dim.collect()] == rows, mode
+            rows = [("a", [2, 0, -1]), ("b", []), ("c", None), ("d", [7, None])]
+            dim = local_dim(spark, rows, "k string, heads array<int>")
+            assert dim.schema["heads"].dataType.simpleString() == "array<int>"
             assert [tuple(r) for r in dim.collect()] == rows, mode
             lookup = {t: t[::-1] for t in texts}
             (row,) = spark.range(1).select(
