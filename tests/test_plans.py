@@ -6,7 +6,9 @@ the scoring UDF, a literal-map lookup (no join) for the canonical map, and
 — the one that actually bit — NO duplicated mention-detection expression
 pushed below the projection (a WHERE on size(mentions) used to be
 predicate-pushed under the mention projection, inlining the whole n-gram
-expression into a Filter and doubling the stage's cost).
+expression into a Filter and doubling the stage's cost). The operator-query
+tests at the end pin what a repeat of the benchmark's seven queries costs:
+the Spark jobs each runs and the classes codegen compiles again.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ from relex_spark.operators.canonicalize import (
 )
 from relex_spark.plans.kg_pipeline import KGPipelineConfig, build_triples
 from relex_spark.sources.transcripts import gazetteer_df, synthesize_transcripts
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -109,8 +113,7 @@ def test_canonical_map_is_a_literal_lookup(spark, transcripts):
 def test_parquet_filter_pushdown(spark):
     """Predicate on a scanned column reaches the parquet reader
     (PushedFilters), not a post-scan Filter only."""
-    sf_dir = "/root/testdata/sf0.001"
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     q = li.where(F.col("l_quantity") > 30).select("l_orderkey", "l_quantity")
     plan = plan_of(q)
     assert "PushedFilters: [" in plan
@@ -140,7 +143,7 @@ def test_pack_greedy_single_shuffle(spark):
     per-shard FlatMapGroupsInPandas fill — nothing wide after it."""
     from relex_spark.operators.packing import pack_greedy
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     # "simple" mode: one tree, so node-name counting is exact ("formatted"
     # prints every node twice — tree + details). Parameters deliberately
     # differ from every other test's pack call: a cached identical plan
@@ -157,7 +160,7 @@ def test_token_budget_mix_no_global_sort(spark):
     only wide Exchange is the hash partitioning on (source, bucket)."""
     from relex_spark.operators.packing import token_budget_mix
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     out = token_budget_mix(docs, {"src1": 3000, "src4": 1200}, n_buckets=16)
     plan = plan_of(out)
     # window exchange is hashpartitioning on (source, bucket) — a
@@ -172,7 +175,7 @@ def test_semantic_dedup_prune_is_equi_join(spark):
     literal-array per-row argmin (no join, no window over the corpus)."""
     from relex_spark.operators.semdedup import semantic_dedup
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     plan = plan_of(semantic_dedup(emb, n_clusters=4, threshold=0.40))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -184,7 +187,7 @@ def test_dup_spans_plan_no_cartesian(spark):
     (rangepartitioning) sort."""
     from relex_spark.operators.dedup import duplicate_ngram_spans
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = plan_of(duplicate_ngram_spans(docs, n=5, min_count=2))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -202,10 +205,9 @@ def test_driver_tier_sweep_no_scale_killers(spark):
     stream do so at sf0.001."""
     from relex_spark.plans import driver_queries as dq
 
-    sf_dir = "/root/testdata/sf0.001"
     offenders: dict[str, list[str]] = {}
     for name, fn in sorted(dq.QUERIES.items()):
-        plan = plan_of(fn(spark, sf_dir))
+        plan = plan_of(fn(spark, SF_DIR))
         hits = [p for p in ("CartesianProduct", "BatchEvalPython") if p in plan]
         if hits:
             offenders[name] = hits
@@ -218,7 +220,7 @@ def test_q1_pushes_filter_and_prunes_scan(spark):
     touches (ReadSchema pruned to the 6 used columns)."""
     from relex_spark.plans import driver_queries as dq
 
-    plan = plan_of(dq.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
+    plan = plan_of(dq.QUERIES["q1_pricing_summary"](spark, SF_DIR))
     scan = plan[plan.index("Scan parquet") :]
     pushed = scan[scan.index("PushedFilters") : scan.index("ReadSchema")]
     assert "l_shipdate" in pushed and "LessThanOrEqual" in pushed
@@ -268,3 +270,73 @@ def test_tacred_planted_candidates_plan_has_no_python_rdd(spark):
     plan = cands._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan
     assert "LogicalRDD" not in plan, plan
+
+
+# Spark jobs per operator query of the benchmark, building the DataFrame
+# plus collecting it, at sf0.001. A change that removes a query's jobs
+# lowers its ceiling here.
+JOB_CEILINGS = {
+    "dedup_ngram_jaccard": 5,
+    "x_lm_score": 11,
+    "v1_token_vocab": 9,
+    "dedup_minhash_lsh": 5,
+    "q1_pricing_summary": 3,
+    "q3_order_revenue": 7,
+    "x_negative_samples": 11,
+}
+# Classes codegen compiles for one cold round of the seven queries at
+# sf0.001 (CodegenMetrics): the working set Spark's class cache must hold.
+CLASSES_PER_ROUND = 150
+
+
+@pytest.fixture(scope="module")
+def operator_rounds(spark):
+    """Run kgbench's seven operator queries three times in this session.
+    Returns the classes codegen compiled in each round and each round's
+    jobs per query (counted by job group)."""
+    from kgbench.workloads import OPERATOR_QUERIES
+    from relex_spark.plans import driver_queries as dq
+
+    queries = {**dq.QUERIES, **dq.EXTRA_QUERIES}
+    sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles, jobs = [], []
+    for round_ in range(3):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        counts = {}
+        for name in OPERATOR_QUERIES:
+            group = f"test.operator_queries.{round_}.{name}"
+            sc.setJobGroup(group, group)
+            try:
+                queries[name](spark, SF_DIR).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            counts[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+        jobs.append(counts)
+    return compiles, jobs
+
+
+def test_operator_queries_reuse_generated_code(operator_rounds):
+    """A warm repeat of the seven queries finds its generated classes in
+    Spark's codegen cache: it compiles at most a tenth of the classes one
+    round needs. At Spark's default of 100 cache entries every repeat
+    recompiled about 135, so get_spark sizes the cache to the registry's
+    working set. The first round is not a baseline, since earlier tests
+    may have compiled the same classes, and a warm round can still compile
+    a few new variants of a query's classes (0-12 seen), so the best of
+    two warm rounds is checked."""
+    compiles, _ = operator_rounds
+    assert min(compiles[1:]) <= 0.1 * CLASSES_PER_ROUND, compiles
+
+
+def test_operator_queries_job_ceilings(operator_rounds):
+    """No operator query runs more Spark jobs than its recorded ceiling."""
+    _, rounds = operator_rounds
+    over = {
+        (round_, name): n
+        for round_, counts in enumerate(rounds)
+        for name, n in counts.items()
+        if n > JOB_CEILINGS[name]
+    }
+    assert not over, over
